@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import graft.functions.{AlnumCount, AlphaWordCount, LongDot, LongSqDist, PositionalFingerprint, SetHitCount, SortedIntersectCount, TokenStats, WinnowFingerprint, WordNGrams}
 
 /** SQL surface for the library's native expressions, registered the
-  * supported way: `SparkSession.builder().withExtensions(new
+  * supported way: the session builder's `withExtensions(new
   * GraftExtensions)` (or
   * `spark.sql.extensions=graft.GraftExtensions`), after which
   * `long_dot`, `long_sq_dist`, `sorted_intersect_count`,

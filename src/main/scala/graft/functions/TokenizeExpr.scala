@@ -18,9 +18,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * directly: no String materialization, no boxed Vector, one
   * allocation per token. Delimiters/quote are ASCII in every shipped
   * format, so byte-wise scanning is UTF-8-safe (multi-byte sequences
-  * never contain ASCII bytes).
+  * never contain ASCII bytes). `quote` is the quote char's code, or
+  * [[QuotedTokenize.NoQuote]], which matches no byte, for a plain
+  * delimiter split (graft.miw.Tokenizer.simpleSplit).
   */
-case class QuotedTokenize(child: Expression, delims: String, quote: Byte)
+case class QuotedTokenize(child: Expression, delims: String, quote: Int)
     extends UnaryExpression with CodegenFallback with Serializable {
 
   require(delims.nonEmpty && delims.forall(_ < 0x80),
@@ -75,7 +77,13 @@ case class QuotedTokenize(child: Expression, delims: String, quote: Byte)
   override def prettyName: String = "quoted_tokenize"
 }
 
+object QuotedTokenize {
+  /** Outside the byte range, so even a raw 0xFF byte never matches. */
+  val NoQuote: Int = 256
+}
+
 object TokenizeExpr {
-  def quotedTokenize(line: Column, delims: String, quote: Char): Column =
-    Shim.column(QuotedTokenize(Shim.expression(line), delims, quote.toByte))
+  def tokenize(line: Column, delims: String, quote: Option[Char]): Column =
+    Shim.column(QuotedTokenize(Shim.expression(line), delims,
+      quote.fold(QuotedTokenize.NoQuote)(_.toInt)))
 }

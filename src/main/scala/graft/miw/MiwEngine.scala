@@ -236,6 +236,34 @@ object MiwEngine {
 
   // -------------------------------------------------------- aggregate
 
+  /** Aggregate columns of one non-ratio field, shared by the batch and
+    * streaming engines. The collect-style aggregations (union,
+    * union_count) are [[aggregate]]'s own; here they fall through to
+    * min like any unknown aggregation. */
+  private[graft] def fieldAggs(f: FieldSpec): Seq[Column] = {
+    val c = fcol(f.name)
+    // non-aggregated filter_contain indicators force sum
+    // (log_record.cc:296-299)
+    if (f.filterType == "contain") Seq(sum(c).as(f.name))
+    else if (!f.aggregated) Seq(min(c).as(f.name))
+    else f.aggregation match {
+      case "sum" => Seq(sum(c).as(f.name))
+      case "max" => Seq(max(c).as(f.name))
+      case "count" => Seq(min(c).as(f.name), count(c).as(f.name + "_count"))
+      // Σ / n at finalize (log_record.cc:627-632)
+      case "mean" => Seq((sum(c).cast(DoubleType) / count(c)).as(f.name))
+      case "variance" =>
+        // naive (Σx² − (Σx)²/n) / max(1, n−1) — exact expression order
+        // of the reference finalize (log_record.cc:633-641), Bessel
+        // dropped at n=1
+        val sx = sum(c).cast(DoubleType)
+        val sxx = sum(c * c).cast(DoubleType)
+        val n = count(c).cast(DoubleType)
+        Seq(((sxx - (sx * sx) / n) / greatest(lit(1.0), n - 1)).as(f.name))
+      case _ => Seq(min(c).as(f.name))
+    }
+  }
+
   /** Grouped aggregation per the per-field aggregation configs, plus the
     * implicit `logs` row count and post-agg ratio columns
     * (miw/log_record.cc:251-324 merge kernel + :600-679 finalize). */
@@ -252,31 +280,9 @@ object MiwEngine {
 
     for (f <- fields if f.aggregation != "ratio") {
       val c = fcol(f.name)
-      if (f.filterType == "contain") {
-        // non-aggregated filter_contain indicators force sum
-        // (log_record.cc:296-299)
-        aggs += sum(c).as(f.name)
-      } else if (!f.aggregated || f.aggregation.isEmpty) {
-        aggs += min(c).as(f.name)
-      } else f.aggregation match {
-        case "sum" => aggs += sum(c).as(f.name)
-        case "max" => aggs += max(c).as(f.name)
-        case "count" =>
-          aggs += min(c).as(f.name)
-          aggs += count(c).as(f.name + "_count")
-        case "mean" =>
-          // Σ / n at finalize (log_record.cc:627-632)
-          aggs += (sum(c).cast(DoubleType) / count(c)).as(f.name)
-          if (ratioRefs(f.name)) aggs += sum(c).as("__sum_" + f.name)
-        case "variance" =>
-          // naive (Σx² − (Σx)²/n) / max(1, n−1) — exact expression order
-          // of the reference finalize (log_record.cc:633-641), Bessel
-          // dropped at n=1
-          val sx = sum(c).cast(DoubleType)
-          val sxx = sum(c * c).cast(DoubleType)
-          val n = count(c).cast(DoubleType)
-          aggs += ((sxx - (sx * sx) / n) / greatest(lit(1.0), n - 1)).as(f.name)
-          if (ratioRefs(f.name)) aggs += sum(c).as("__sum_" + f.name)
+      val aggregation =
+        if (f.filterType == "contain" || !f.aggregated) "" else f.aggregation
+      aggregation match {
         case "union" =>
           // strings dedup, numerics concatenate (log_record.cc:57-142);
           // both canonically sorted for determinism
@@ -286,7 +292,10 @@ object MiwEngine {
             aggs += array_sort(collect_list(c)).as(f.name)
         case "union_count" =>
           aggs += UnionCount(c.cast("string")).as("__uc_" + f.name)
-        case _ => aggs += min(c).as(f.name)
+        case _ =>
+          aggs ++= fieldAggs(f)
+          if ((aggregation == "mean" || aggregation == "variance") && ratioRefs(f.name))
+            aggs += sum(c).as("__sum_" + f.name)
       }
       if (f.preprocessing == "evtxcsv" || f.preprocessing == "evtxcsv2")
         // maps are not orderable: deterministic pick via min_by on the

@@ -6,14 +6,10 @@ import org.apache.spark.sql.functions._
 /** Line tokenization matching the reference engine's semantics
   * (reference: miw/log_format.cc:100-173).
   *
-  * Two paths:
-  *  - no quotechar: split on any char of the delimiter *set*, dropping
-  *    empty tokens (runs of delimiters collapse). This is expressed as
-  *    pure Column expressions so it stays inside whole-stage codegen.
-  *  - quotechar set: a scanner that additionally keeps quoted spans
-  *    (token starting with the quote char runs until a token ending
-  *    with the quote char, delimiters in between preserved) — a Scala
-  *    UDF, since `split` cannot express the rejoin.
+  * Tokens split on any char of the delimiter *set*, dropping empty
+  * tokens (runs of delimiters collapse). With a quotechar, quoted spans
+  * are kept whole (a token starting with the quote char runs until a
+  * token ending with the quote char, delimiters in between preserved).
   */
 object Tokenizer {
 
@@ -65,29 +61,22 @@ object Tokenizer {
     out.result()
   }
 
-  private def escapeForCharClass(delims: String): String =
-    delims.flatMap {
-      case c @ ('\\' | ']' | '[' | '^' | '-') => "\\" + c
-      case c => c.toString
-    }
-
-  /** Column of array&lt;string&gt; tokens for `line`. Codegen-friendly
-    * regex split when no quotechar; the native UTF8String scanner
-    * expression (graft.functions.QuotedTokenize — same semantics as
-    * [[quotedSplit]], no boxing) otherwise. */
+  /** Column of array&lt;string&gt; tokens for `line`: the native
+    * UTF8String scanner (graft.functions.QuotedTokenize — same
+    * semantics as [[quotedSplit]], or [[simpleSplit]] without a
+    * quotechar; no boxing) when the delimiters and quotechar are ASCII,
+    * else a UDF over the Scala reference split. */
   def tokensCol(line: Column, delims: String, quotechar: String): Column =
-    if (quotechar.isEmpty) {
-      val cls = "[" + escapeForCharClass(delims) + "]"
-      filter(split(line, cls), t => t =!= lit(""))
-    } else if (delims.forall(_ < 0x80) && quotechar.charAt(0) < 0x80) {
+    if (delims.forall(_ < 0x80) && quotechar.forall(_ < 0x80)) {
+      graft.functions.TokenizeExpr.tokenize(line, delims, quotechar.headOption)
+    } else {
       // the native scanner compares raw UTF-8 bytes; a non-ASCII delim
       // or quotechar would truncate to a byte that can spuriously match
-      // UTF-8 continuation bytes — those take the UDF fallback below
-      graft.functions.TokenizeExpr.quotedTokenize(line, delims, quotechar.charAt(0))
-    } else {
-      val q = quotechar.charAt(0)
-      val f = udf((s: String) =>
-        if (s == null) Vector.empty[String] else quotedSplit(s, delims, q))
-      f(line)
+      // UTF-8 continuation bytes
+      val split: String => Vector[String] = quotechar.headOption match {
+        case Some(q) => quotedSplit(_, delims, q)
+        case None => simpleSplit(_, delims)
+      }
+      udf((s: String) => if (s == null) Vector.empty[String] else split(s)).apply(line)
     }
 }

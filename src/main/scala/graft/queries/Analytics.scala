@@ -1609,7 +1609,7 @@ object Analytics {
     // (lo2 = 2·p25 − 3·IQR, hi2 = 2·p75 + 3·IQR) and every delay
     // compares as delay·2, so the whole card is integer-exact.
     // 100 TB shape (r13, the histogram form — measured 2.1× over the
-    // r12 shape in ABQuantile): ONE corpus pass reduces the delays to
+    // r12 shape, r13 A/B): ONE corpus pass reduces the delays to
     // a codegen groupBy((priority, delay)) histogram, which is cut()
     // and feeds the autoBuffer scalar, the WEIGHTED exact sketch
     // (state-identical to raw rows — q139's contract) and the fence

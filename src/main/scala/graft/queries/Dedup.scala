@@ -43,11 +43,6 @@ import graft.functions.ExactCols._
   *    corpus needs exact dedup first (identical docs all share every
   *    band) — pair enumeration inside it is quadratic OUTPUT, not an
   *    algorithmic win, so capping is the honest behavior at 100 TB.
-  *  - [[LshConfig.persistSignatures]] materializes the (capped) band
-  *    table before the self-join: Spark recomputes a self-joined
-  *    subtree once per side, so at scale one persist halves signature
-  *    computation. Off by default (the gate queries measure the pure
-  *    plan); Profile demonstrates the effect at sf0.1.
   *  - Exact verification (jaccard / hamming) runs only on candidates.
   *  - q27 stays the brute-force O(n²) baseline — `cosinePairs` with
   *    its default `brute = false` is the bucketed 100 TB path.
@@ -81,13 +76,7 @@ object Dedup {
       maxHamming: Int = 3,
       /** Skew guard: keep at most this many members per band/block
         * bucket (deterministic first-by-id). */
-      maxBucketSize: Int = 256,
-      /** Materialize the band table before the self-join (one
-        * signature computation instead of two). The cached blocks
-        * live until the session evicts them — long-running callers
-        * own the lifecycle (spark.catalog.clearCache() or keep the
-        * default off). */
-      persistSignatures: Boolean = false) {
+      maxBucketSize: Int = 256) {
     require(numHashes > 0 && bands > 0 && numHashes % bands == 0,
       s"numHashes ($numHashes) must be a positive multiple of bands ($bands) " +
         "or trailing hash functions would be silently unused")
@@ -340,19 +329,8 @@ object Dedup {
         // sides of the materialized table — two shuffles of a narrow
         // (doc_id, band, sig) table, ~2.5 MB at sf0.1, vs re-running
         // the signature subtree per side (md5 over every shingle).
-        // On a cluster where those shuffles bite,
-        // persistSignatures=true swaps the cut for persist(): the
-        // InMemoryRelation sits directly on the cap window's
-        // Exchange hashpartitioning(band, sig) (verified in the
-        // executed plan at r13) and InMemoryTableScan exposes that
-        // partitioning, so a sort-merge self-join on (band, sig)
-        // reuses it instead of re-exchanging — at the price of cache
-        // lifecycle ownership and uncut lineage (see
-        // LshConfig.persistSignatures). At gate sfs AQE broadcasts
-        // one side anyway, which is why the cut stays the default.
-        val bands = bandTable(minhashSignaturesDistinct(docs, cfg), cfg)
         collidingPairs(
-          (if (cfg.persistSignatures) bands.persist() else bands.cut()),
+          bandTable(minhashSignaturesDistinct(docs, cfg), cfg).cut(),
           Seq("band", "sig"))
       }
     cand
@@ -504,10 +482,9 @@ object Dedup {
   }
 
   private def simhashPairsFromSigs(sim: DataFrame, cfg: LshConfig): DataFrame = {
-    val blocks = blockTable(sim, cfg)
     // cut (same rationale as the minhash band table): the block
     // self-join would otherwise re-run the signature expansion per side
-    val mat = if (cfg.persistSignatures) blocks.persist() else blocks.cut()
+    val mat = blockTable(sim, cfg).cut()
     val cond = col("a.bi") === col("b.bi") && col("a.bv") === col("b.bv") &&
       col("a.doc_id") < col("b.doc_id")
     mat.as("a").join(mat.as("b"), cond)
@@ -1368,9 +1345,9 @@ object Dedup {
     * (r10): one corpus window pass + one checkpointed rep-text table
     * replace the per-route scan+window+tokenize passes the standalone
     * route functions each run. Route semantics are EXACT — the
-    * *Collapsed bodies are the same code the standalone wrappers run,
-    * and graft.tools.ABRoutes asserts matrix identity before timing.
-    * Measured same-JVM alternating min-of-3 (ABRoutes): standalone
+    * *Collapsed bodies are the same code the standalone wrappers run.
+    * Measured with the since-deleted ABRoutes tool (r10, same-JVM
+    * alternating min-of-3, matrix identity asserted): standalone
     * 10.04 s vs shared 8.35 s at sf0.1 (1.20×), 36.6 vs 33.3 s at
     * sf10 (1.10× — the ScaleUp corpus is clone-expansion-dominated,
     * 27 M expanded pairs, so the saved scan/window share shrinks);

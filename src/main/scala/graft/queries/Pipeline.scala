@@ -2089,7 +2089,7 @@ object Pipeline {
     // keep at ≥ 3 of 4. SHARED-SUBTREE FORM (r8): one cut()
     // (gid, tok, tf) table feeds all four votes instead of each
     // vote re-collapsing and re-tokenizing the corpus — same-JVM
-    // min-of-passes A/B: 1.57× at sf0.1, 1.79× at sf1 (ABQuality);
+    // min-of-passes A/B: 1.57× at sf0.1, 1.79× at sf1 (r8 A/B);
     // PipelineSpec pins ensemble ≡ composition column-for-column
     Q("q101_quality_ensemble", (s, d) => {
       val w = s.range(512).select(col("id").as("bucket"),

@@ -18,34 +18,26 @@ import graft.miw.{LogFormat, MiwEngine}
   *
   * `parse` is reused verbatim from the batch engine: every per-row
   * transform (tokenize, casts, bucketing, matches) is
-  * streaming-compatible by construction. Only the aggregation differs:
-  * streaming supports the monoid aggs (count/sum/max/min/mean);
-  * collect-style aggs (union/union_count) need `flatMapGroupsWithState`
-  * and are intentionally not offered here — at 100 TB/day you do not
-  * want unbounded per-key sets in the state store.
+  * streaming-compatible by construction. So is every per-field
+  * aggregate except the collect-style ones (union/union_count), which
+  * need `flatMapGroupsWithState` and are intentionally not offered
+  * here — at 100 TB/day you do not want unbounded per-key sets in the
+  * state store.
   */
 object MiwStreaming {
 
   /** Running keyed aggregation over a (possibly unbounded) line
-    * stream; same plan shape as the batch `MiwEngine.aggregate` minus
-    * collect-style aggs and output-time sorting. */
+    * stream: `logs` first, then each non-ratio field's columns exactly
+    * as the batch `MiwEngine.aggregate` emits them (count adds
+    * `<name>_count`, variance is the reference's naive variance). It
+    * drops ratio fields and output-time finalization, and a union or
+    * union_count field keeps only the min of its values instead of the
+    * batch engine's sorted set or value counts. */
   def aggregateStream(fmt: LogFormat, lines: DataFrame): DataFrame = {
-    val parsed = MiwEngine.parse(fmt, lines)
-    val aggs = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Column]
-    aggs += count(lit(1)).as("logs")
-    for (f <- fmt.resolvedFields if f.aggregation != "ratio") {
-      val c = col("`" + f.name + "`")
-      if (f.filterType == "contain") aggs += sum(c).as(f.name)
-      else if (!f.aggregated || f.aggregation.isEmpty) aggs += min(c).as(f.name)
-      else f.aggregation match {
-        case "sum"  => aggs += sum(c).as(f.name)
-        case "max"  => aggs += max(c).as(f.name)
-        case "mean" => aggs += (sum(c).cast("double") / count(c)).as(f.name)
-        case _      => aggs += min(c).as(f.name)
-      }
-    }
-    parsed.groupBy(col("__miw_key").as("id"))
-      .agg(aggs.head, aggs.tail.toSeq: _*)
+    val aggs = count(lit(1)).as("logs") +:
+      fmt.resolvedFields.filter(_.aggregation != "ratio").flatMap(MiwEngine.fieldAggs)
+    MiwEngine.parse(fmt, lines).groupBy(col("__miw_key").as("id"))
+      .agg(aggs.head, aggs.tail: _*)
   }
 
   /** Event-time tumbling-window variant with a watermark: the

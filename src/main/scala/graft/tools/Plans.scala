@@ -2,14 +2,13 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (not part of the driver contract): dump
   * `explain("formatted")` for every declared query — the judge-facing
-  * plan evidence under plans/r12/. Mirrors Bench's session config so
-  * the captured plans are the benched plans (AQE initial plan; the
-  * runtime-re-optimized plan is what executes, but Exchange count,
-  * join strategy and PushedFilters are decided here).
+  * plan evidence under plans/r12/. Builds its session with
+  * [[graft.Session]], as Bench does, so at the same `SPARK_GRAFT_CPUS`
+  * the captured plans are the benched plans by construction (AQE
+  * initial plan; the runtime-re-optimized plan is what executes, but
+  * Exchange count, join strategy and PushedFilters are decided here).
   *
   * Usage: SPARK_GRAFT_SF_DIR=… SPARK_GRAFT_CPUS=32 \
   *   sbt "runMain graft.tools.Plans <outDir> [suffix] [q24,q55,…]"
@@ -23,15 +22,7 @@ object Plans {
       Some(args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet)
     else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     val selected = graft.SparkEntry.queries.toSeq.sortBy(_._1)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Bench-data scaler: replicates a testdata directory `factor`× with
@@ -49,14 +49,8 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, f) = args
     val factor = f.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     new java.io.File(dst).mkdirs()
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     // one step per referenced (table, column), from the SOURCE data

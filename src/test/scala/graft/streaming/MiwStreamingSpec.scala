@@ -98,6 +98,33 @@ class MiwStreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("count and variance fields stream exactly what the batch engine emits") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val fmt = LogFormat.parse(
+      """{"format_name":"t","delims":",","fields":[
+          {"name":"k","pos":0,"type":"string","key":true},
+          {"name":"c","pos":1,"type":"string","aggregated":true,"aggregation":"count"},
+          {"name":"v","pos":2,"type":"int","aggregated":true,"aggregation":"variance"}]}""")
+    val batches = Seq(Seq("a,x,1", "a,y,4", "b,z,10"), Seq("a,w,7", "c,q,7", "b,r,2"))
+    val in = MemoryStream[String]
+    val q = MiwStreaming.aggregateStream(fmt, in.toDF())
+      .writeStream.format("memory").queryName("miw_cv")
+      .outputMode("complete").start()
+    try {
+      batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      val streamed = spark.table("miw_cv")
+      // logs stays slot 0: consumers read the running count there
+      assert(streamed.columns.toSeq == Seq("id", "logs", "k", "c", "c_count", "v"))
+      val batch = graft.miw.MiwEngine.runOnLines(spark, fmt, batches.flatten)
+        .select(streamed.columns.map(org.apache.spark.sql.functions.col): _*)
+      val rows = (df: org.apache.spark.sql.DataFrame) => df.collect().map(_.toSeq).toSet
+      assert(rows(streamed) == rows(batch))
+      assert(streamed.filter("id = 'a'").select("c", "c_count", "v").head().toSeq ==
+        Seq("w", 3L, 9.0))
+    } finally q.stop()
+  }
+
   test("event-time tumbling window with watermark") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
