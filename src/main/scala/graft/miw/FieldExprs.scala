@@ -1,13 +1,17 @@
 package graft.miw
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType}
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.types.{BooleanType, LongType}
 
 /** Per-field scalar transforms: date/time bucketing, URL normalization,
   * C-style numeric casts, and the evtx/DNS preprocessing parsers.
-  * All built from `org.apache.spark.sql.functions` Column expressions
-  * where possible (codegen'd); UDFs only for the three blob parsers.
+  * Date bucketing is built from `org.apache.spark.sql.functions`
+  * Column expressions; time bucketing, URLs and the casts are native
+  * one-pass kernels ([[FieldKernels]]); all of these run in whole-stage
+  * codegen. UDFs only for the two evtx blob parsers.
   *
   * Semantics from the reference parse loop (miw/log_format.cc:401-538)
   * and preprocessors (miw/log_format.cc:606-716).
@@ -61,7 +65,7 @@ object FieldExprs {
     * the reference's warn-and-keep behavior). */
   def parseDate(token: Column, dateFormat: String): Column =
     if (dateFormat == "unix")
-      timestamp_seconds(token.cast(LongType))
+      timestamp_seconds(token.try_cast(LongType))
     else
       try_to_timestamp(token, lit(strptimeToSpark(dateFormat)))
 
@@ -88,79 +92,43 @@ object FieldExprs {
   /** Bare HH:MM:SS bucketing for `time`-typed fields (no date): keeps
     * the original string parts before the bucketed unit, zero-pads the
     * bucketed unit (miw/log_format.cc:445-472). Non-3-part tokens pass
-    * through unchanged. */
-  def timeBucket(token: Column, processing: String, offset: Int): Column = {
-    val parts = split(trim(token), ":")
-    val ok = size(parts) === 3
-    def bucket(unit: Column): Column = {
-      val b = (floor(unit.cast(LongType) / offset) * offset).cast(LongType)
-      lpad(b.cast("string"), 2, "0")
-    }
-    val bucketed = processing match {
-      case "hour"   => bucket(element_at(parts, 1))
-      case "minute" => concat(element_at(parts, 1), lit(":"), bucket(element_at(parts, 2)))
-      case "second" => concat(element_at(parts, 1), lit(":"), element_at(parts, 2),
-                              lit(":"), bucket(element_at(parts, 3)))
-      case _ => token
-    }
-    when(ok, bucketed).otherwise(token)
-  }
+    * through unchanged; a non-numeric unit reads as C atoi does
+    * ([[FieldKernels.timeBucket]]). */
+  def timeBucket(token: Column, processing: String, offset: Int): Column =
+    kernel(TimeBucket(_, processing, offset))(token)
 
   // ----------------------------------------------------------------- urls
 
   /** Rebuild a URL through the field's url_format template
     * (%scheme %host %port %path %query %fragment; default
     * "%scheme://%host%port"). %port renders ":<port>" when present.
-    * Tokens without a scheme, or containing "://[" (IPv6 — reference
-    * works around a parser hang), pass through unchanged.
+    * Tokens without a scheme, containing "://[" (IPv6 — reference
+    * works around a parser hang), or that do not parse as a URI pass
+    * through unchanged. One java.net.URI parse per token, read through
+    * the same getters as Spark's parse_url ([[FieldKernels.urlNormalize]]).
     * (reference: miw/log_format.cc:473-500) */
-  def urlNormalize(token: Column, urlFormat: String): Column = {
-    val partOf = Map(
-      "%scheme"   -> ((c: Column) => coalesce(parse_url(c, lit("PROTOCOL")), lit(""))),
-      "%host"     -> ((c: Column) => coalesce(parse_url(c, lit("HOST")), lit(""))),
-      "%port"     -> ((c: Column) => {
-        // parse_url has no PORT part (Hive-compatible set); take it from
-        // the AUTHORITY's ":<digits>" suffix
-        val p = regexp_extract(coalesce(parse_url(c, lit("AUTHORITY")), lit("")),
-          ":(\\d+)$", 1)
-        when(p =!= "", concat(lit(":"), p)).otherwise(lit(""))
-      }),
-      "%path"     -> ((c: Column) => coalesce(parse_url(c, lit("PATH")), lit(""))),
-      "%query"    -> ((c: Column) => coalesce(parse_url(c, lit("QUERY")), lit(""))),
-      "%fragment" -> ((c: Column) => coalesce(parse_url(c, lit("REF")), lit(""))))
-    // split the template into literal / %var pieces
-    val varPat = "%(scheme|host|port|path|query|fragment)".r
-    val pieces = scala.collection.mutable.ArrayBuffer.empty[Column]
-    var last = 0
-    for (m <- varPat.findAllMatchIn(urlFormat)) {
-      if (m.start > last) pieces += lit(urlFormat.substring(last, m.start))
-      pieces += partOf(m.matched)(token)
-      last = m.end
-    }
-    if (last < urlFormat.length) pieces += lit(urlFormat.substring(last))
-    val rebuilt = concat(pieces.toSeq: _*)
-    val scheme = parse_url(token, lit("PROTOCOL"))
-    when(token.contains("://["), token)
-      .when(scheme.isNull || scheme === "", token)
-      .otherwise(rebuilt)
-  }
+  def urlNormalize(token: Column, urlFormat: String): Column =
+    kernel(UrlNormalize(_, urlFormat))(token)
 
   // ---------------------------------------------------------------- casts
 
-  /** C atoi: parse a leading integer, 0 on garbage (never null) —
-    * miw/log_format.cc:506. */
-  def atoi(token: Column): Column =
-    coalesce(regexp_extract(trim(token), "^[+-]?\\d+", 0).cast(LongType), lit(0L))
+  /** C atoi (miw/log_format.cc:506), with strtoll semantics: leading
+    * C whitespace skipped, an optional sign, then decimal digits; 0
+    * when there are none (`-`, `abc`, empty, null); saturates at
+    * Long.MinValue/Long.MaxValue. Never null and never throws, so a
+    * dirty token cannot fail a job under ANSI mode. */
+  def atoi(token: Column): Column = kernel(CAtoi)(token)
 
-  /** C atof: parse a leading decimal number, 0.0 on garbage. */
-  def atof(token: Column): Column =
-    coalesce(
-      regexp_extract(trim(token),
-        "^[+-]?(\\d+\\.?\\d*|\\.\\d+)([eE][+-]?\\d+)?", 0).cast(DoubleType),
-      lit(0.0))
+  /** C atof (strtod): the longest leading decimal or hex float, `inf`,
+    * `infinity` or `nan` after C whitespace and an optional sign; 0.0
+    * when none converts (`-`, `x1.5`, empty, null). Never throws. */
+  def atof(token: Column): Column = kernel(CAtof)(token)
 
   /** bool via atoi != 0 (miw/log_format.cc:529). */
   def atob(token: Column): Column = (atoi(token) =!= 0L).cast(BooleanType)
+
+  private def kernel(k: Expression => Expression)(token: Column): Column =
+    Shim.column(k(Shim.expression(token)))
 
   // -------------------------------------------------------- preprocessing
 

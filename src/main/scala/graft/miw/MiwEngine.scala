@@ -2,25 +2,31 @@ package graft.miw
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{DoubleType, FloatType}
 
-import graft.functions.UnionCount
+import graft.functions.{LineFields, UnionCount}
 
 /** Compiles a [[LogFormat]] into a declarative Spark plan:
   *
   * {{{
-  * spark.read.text → tokenize → per-field Column exprs (casts, date/
-  * time buckets, URL normalize, preprocessing) → match predicates
-  * (where) → groupBy(composite key) → agg(...) → ratio projections
+  * spark.read.text → line-fields generator (one tokenizing pass) →
+  * row-bounds filter → per-field Column exprs (casts, date/time
+  * buckets, URL normalize, preprocessing) → match predicates (where)
+  * → groupBy(composite key) → agg(...) → ratio projections
   * }}}
   *
   * This is the whole reference product (miw/mr_job.cc + miw/log_format
   * .cc + miw/log_record.cc) re-expressed as a Catalyst logical plan:
-  * filters run before aggregation so predicate pushdown applies, the
-  * groupBy compiles to partial+final HashAggregate (the reference's
-  * combiner/reducer split), and everything except the quote-aware
-  * tokenizer and the two evtx blob parsers stays in whole-stage
-  * codegen.
+  * filters run before aggregation so predicate pushdown applies, and
+  * the groupBy compiles to partial+final HashAggregate (the
+  * reference's combiner/reducer split). The reference's one pass over
+  * a line (tokenize, filter, transform, key) is one
+  * [[graft.functions.LineFields]] generator: it is interpreted
+  * (CodegenFallback), so its Generate runs outside whole-stage
+  * codegen, as does any operator holding one of the two evtx blob
+  * UDFs. The bounds filter and the per-field projection above it,
+  * including the native cast/URL/time kernels of [[FieldKernels]],
+  * are whole-stage codegen'd.
   *
   * Known, documented divergences from the reference (SURVEY §7.4):
   * union arrays are canonically sorted (reference: nondeterministic
@@ -48,7 +54,7 @@ object MiwEngine {
 
   /** Internal working column names (never collide with format fields). */
   private val KEY = "__miw_key"
-  private val TOKENS = "__miw_tokens"
+  private val NTOK = "__miw_ntok"
   private val LINE = "__miw_line"
 
   /** Dictionaries above this size no longer inline into an isin
@@ -135,6 +141,73 @@ object MiwEngine {
 
   // ------------------------------------------------------------ parse
 
+  /** Typed value, key and match columns from one raw string token per
+    * field, shared by the delimited-text [[parse]] and [[runOnTable]]:
+    * the key column, then each non-ratio field's value column (plus the
+    * evtx/DNS preprocessing columns), the match predicate and any
+    * dictionary joins. `tail` gives the raw token tail a
+    * microsoftdnslogs field decodes. */
+  private def fieldColumns(fmt: LogFormat, raw: FieldSpec => Column, tail: FieldSpec => Column)
+      : (Seq[Column], Option[Column], Seq[DictJoin]) = {
+    val fields = fmt.resolvedFields
+    // processed string token per field (transformed); shared by the key
+    // builder, matches, and the typed value
+    def processed(f: FieldSpec): Column = {
+      val tok = raw(f)
+      val isDateKind = f.ftype == "date" ||
+        Set("day", "month", "year").contains(f.processing)
+      if (isDateKind && f.processing.nonEmpty) {
+        val ts = FieldExprs.parseDate(tok, f.dateFormat)
+        when(ts.isNull, tok)
+          .otherwise(FieldExprs.dateBucket(ts, f.processing, f.processingOffset))
+      } else if (isDateKind) tok // date type without processing keeps the raw string
+      else if (Set("hour", "minute", "second").contains(f.processing))
+        FieldExprs.timeBucket(tok, f.processing, f.processingOffset)
+      else if (f.ftype == "url") FieldExprs.urlNormalize(tok, f.urlFormat)
+      else tok
+    }
+
+    val (keep, dictJoins) = matchFilters(fmt, processed)
+
+    val valueCols = scala.collection.mutable.ArrayBuffer.empty[Column]
+    for (f <- fields if f.aggregation != "ratio") {
+      if (f.filterType == "contain") {
+        // derived 1/0 indicator over the sibling string field at the
+        // same pos (filter_contain, log_format.cc:718-751)
+        val sibling = fields.find(g =>
+          g.pos == f.pos && g.filter.isEmpty && g.name != f.name && g.ftype == "string")
+        valueCols += (sibling match {
+          case Some(g) => when(processed(g).contains(f.filter), 1L).otherwise(0L)
+          case None => lit(0L)
+        }).as(f.name)
+      } else {
+        val tok = processed(f)
+        val v = f.ftype match {
+          case "int"   => FieldExprs.atoi(tok)
+          case "float" => FieldExprs.atof(tok)
+          case "bool"  => FieldExprs.atob(tok)
+          case _       => trim(tok) // string / date / time / url kinds
+        }
+        valueCols += v.as(f.name)
+        f.preprocessing match {
+          case "evtxcsv" => valueCols += FieldExprs.evtxcsvUdf(tok).as(f.name + "_kv")
+          case "evtxcsv2" => valueCols += FieldExprs.evtxcsv2Udf(tok).as(f.name + "_kv")
+          // decoded from the concatenated token tail (log_format.cc:549-555)
+          case "microsoftdnslogs" => valueCols += FieldExprs.dnsNameCol(tail(f)).as(f.name + "_dns")
+          case _ =>
+        }
+      }
+    }
+
+    // composite key from processed key tokens, "_"-joined, appname
+    // suffix (log_format.cc:557-563,591-592)
+    val keyParts = fields.filter(f => f.key && f.aggregation != "ratio").map(processed)
+    val keyCol = if (keyParts.isEmpty) lit("") else concat_ws("_", keyParts: _*)
+    val keyWithApp =
+      if (fmt.appname.nonEmpty) concat(keyCol, lit("_" + fmt.appname)) else keyCol
+    (keyWithApp.as(KEY) +: valueCols.toSeq, keep, dictJoins)
+  }
+
   /** Lines (single string column) → one typed column per field plus the
     * composite key, with comment/blank/bounds/match filtering applied. */
   def parse(fmt: LogFormat, lines: DataFrame, opts: Options = Options()): DataFrame = {
@@ -153,85 +226,24 @@ object MiwEngine {
       df = df.filter(!col(LINE).startsWith(fmt.commentchar.take(1)))
     df = df.filter(length(trim(col(LINE))) > 0)
 
-    df = df.withColumn(TOKENS, Tokenizer.tokensCol(col(LINE), fmt.delims, fmt.quotechar))
+    // one tokenizing pass: token count plus the quote-stripped token at
+    // each read position (and the raw tails the DNS decoder reads)
+    val read = fmt.resolvedFields.filter(_.aggregation != "ratio")
+    val positions = read.map(_.pos).distinct.sorted
+    val tails = read.filter(_.preprocessing == "microsoftdnslogs").map(_.pos).distinct.sorted
+    def tok(p: Int) = s"__miw_t$p"
+    def tail(p: Int) = s"__miw_tail$p"
+    df = df.select(col(LINE), LineFields.column(col(LINE), fmt.delims, fmt.quotechar,
+      positions, tails, NTOK +: (positions.map(tok) ++ tails.map(tail))))
     // row-bounds guard (log_format.cc:258-262)
-    df = df.filter(size(col(TOKENS)) > fmt.maxPos)
+    df = df.filter(col(NTOK) > fmt.maxPos)
 
-    val fields = fmt.resolvedFields
-    // processed string token per field (quote-stripped, transformed);
-    // shared by the key builder, matches, and the typed value.
-    def rawToken(f: FieldSpec): Column =
-      regexp_replace(element_at(col(TOKENS), f.pos + 1), "\"", "")
-
-    def processedToken(f: FieldSpec): Column = {
-      val tok = rawToken(f)
-      val isDateKind = f.ftype == "date" ||
-        Set("day", "month", "year").contains(f.processing)
-      if (isDateKind && (f.processing.nonEmpty)) {
-        val ts = FieldExprs.parseDate(tok, f.dateFormat)
-        when(ts.isNull, tok)
-          .otherwise(FieldExprs.dateBucket(ts, f.processing, f.processingOffset))
-      } else if (isDateKind) {
-        tok // date type without processing keeps the raw string
-      } else if (Set("hour", "minute", "second").contains(f.processing)) {
-        FieldExprs.timeBucket(tok, f.processing, f.processingOffset)
-      } else if (f.ftype == "url") {
-        FieldExprs.urlNormalize(tok, f.urlFormat)
-      } else tok
-    }
-
-    val (keep, dictJoins) = matchFilters(fmt, processedToken)
-
-    // ---- value columns
-    val valueCols = scala.collection.mutable.ArrayBuffer.empty[Column]
-    for (f <- fields if f.aggregation != "ratio") {
-      if (f.filterType == "contain") {
-        // derived 1/0 indicator over the sibling string field at the
-        // same pos (filter_contain, log_format.cc:718-751)
-        val sibling = fields.find(g =>
-          g.pos == f.pos && g.filter.isEmpty && g.name != f.name &&
-          g.ftype == "string")
-        val ind = sibling match {
-          case Some(g) =>
-            when(processedToken(g).contains(f.filter), 1L).otherwise(0L)
-          case None => lit(0L)
-        }
-        valueCols += ind.as(f.name)
-      } else {
-        val tok = processedToken(f)
-        val v = f.ftype match {
-          case "int"    => FieldExprs.atoi(tok)
-          case "float"  => FieldExprs.atof(tok)
-          case "bool"   => FieldExprs.atob(tok)
-          case _        => trim(tok) // string / date / time / url kinds
-        }
-        valueCols += v.as(f.name)
-        if (f.preprocessing == "evtxcsv")
-          valueCols += FieldExprs.evtxcsvUdf(tok).as(f.name + "_kv")
-        else if (f.preprocessing == "evtxcsv2")
-          valueCols += FieldExprs.evtxcsv2Udf(tok).as(f.name + "_kv")
-        else if (f.preprocessing == "microsoftdnslogs") {
-          // decoded from the concatenated token tail (log_format.cc:549-555)
-          val tail = array_join(slice(col(TOKENS), f.pos + 1, Int.MaxValue), "")
-          valueCols += FieldExprs.dnsNameCol(tail).as(f.name + "_dns")
-        }
-      }
-    }
-
-    // composite key from processed key tokens, "_"-joined, appname
-    // suffix (log_format.cc:557-563,591-592)
-    val keyParts = fields.filter(f => f.key && f.aggregation != "ratio")
-      .map(f => processedToken(f))
-    val keyCol =
-      if (keyParts.isEmpty) lit("")
-      else concat_ws("_", keyParts: _*)
-    val keyWithApp =
-      if (fmt.appname.nonEmpty) concat(keyCol, lit("_" + fmt.appname)) else keyCol
-
+    val (cols, keep, dictJoins) =
+      fieldColumns(fmt, f => col(tok(f.pos)), f => col(tail(f.pos)))
     val extra =
       if (opts.storeContent) Seq(col(LINE).as("__miw_content")) else Nil
     val filtered = applyDictJoins(keep.map(df.filter).getOrElse(df), dictJoins)
-    filtered.select((keyWithApp.as(KEY) +: valueCols.toSeq) ++ extra: _*)
+    filtered.select(cols ++ extra: _*)
   }
 
   // -------------------------------------------------------- aggregate
@@ -411,53 +423,12 @@ object MiwEngine {
     */
   def runOnTable(fmt: LogFormat, table: DataFrame,
                  opts: Options = Options()): DataFrame = {
-    val fields = fmt.resolvedFields
-    def processed(f: FieldSpec): Column = {
-      val tok = fcol(f.name).cast("string")
-      val isDateKind = f.ftype == "date" ||
-        Set("day", "month", "year").contains(f.processing)
-      if (isDateKind && f.processing.nonEmpty) {
-        val ts = FieldExprs.parseDate(tok, f.dateFormat)
-        when(ts.isNull, tok)
-          .otherwise(FieldExprs.dateBucket(ts, f.processing, f.processingOffset))
-      } else if (isDateKind) tok
-      else if (Set("hour", "minute", "second").contains(f.processing))
-        FieldExprs.timeBucket(tok, f.processing, f.processingOffset)
-      else if (f.ftype == "url") FieldExprs.urlNormalize(tok, f.urlFormat)
-      else tok
-    }
-    // match predicates — same semantics as parse()
-    val (keep, dictJoins) = matchFilters(fmt, processed)
-
-    val valueCols = scala.collection.mutable.ArrayBuffer.empty[Column]
-    for (f <- fields if f.aggregation != "ratio") {
-      if (f.filterType == "contain") {
-        // sibling = the real column field sharing this pos
-        val sibling = fields.find(g =>
-          g.pos == f.pos && g.filter.isEmpty && g.name != f.name && g.ftype == "string")
-        valueCols += (sibling match {
-          case Some(g) => when(processed(g).contains(f.filter), 1L).otherwise(0L)
-          case None => lit(0L)
-        }).as(f.name)
-      } else {
-        val tok = processed(f)
-        val v = f.ftype match {
-          case "int"   => FieldExprs.atoi(tok)
-          case "float" => FieldExprs.atof(tok)
-          case "bool"  => FieldExprs.atob(tok)
-          case _       => trim(tok)
-        }
-        valueCols += v.as(f.name)
-      }
-    }
-    val keyParts = fields.filter(f => f.key && f.aggregation != "ratio").map(processed)
-    val keyCol = if (keyParts.isEmpty) lit("") else concat_ws("_", keyParts: _*)
-    val keyWithApp =
-      if (fmt.appname.nonEmpty) concat(keyCol, lit("_" + fmt.appname)) else keyCol
+    // no preprocessing over structured columns, so no token tail is read
+    val plain = fmt.copy(fields = fmt.fields.map(_.copy(preprocessing = "")))
+    val (cols, keep, dictJoins) =
+      fieldColumns(plain, f => fcol(f.name).cast("string"), _ => lit(null))
     val filtered = applyDictJoins(keep.map(table.filter).getOrElse(table), dictJoins)
-    val parsed = filtered.select(keyWithApp.as(KEY) +: valueCols.toSeq: _*)
-    aggregate(fmt.copy(fields = fmt.fields.map(_.copy(preprocessing = ""))),
-      parsed, opts.copy(storeContent = false))
+    aggregate(plain, filtered.select(cols: _*), opts.copy(storeContent = false))
   }
 
   /** Top-k display ordering: count desc, key asc

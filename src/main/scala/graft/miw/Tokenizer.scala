@@ -1,8 +1,5 @@
 package graft.miw
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 /** Line tokenization matching the reference engine's semantics
   * (reference: miw/log_format.cc:100-173).
   *
@@ -60,23 +57,4 @@ object Tokenizer {
     }
     out.result()
   }
-
-  /** Column of array&lt;string&gt; tokens for `line`: the native
-    * UTF8String scanner (graft.functions.QuotedTokenize — same
-    * semantics as [[quotedSplit]], or [[simpleSplit]] without a
-    * quotechar; no boxing) when the delimiters and quotechar are ASCII,
-    * else a UDF over the Scala reference split. */
-  def tokensCol(line: Column, delims: String, quotechar: String): Column =
-    if (delims.forall(_ < 0x80) && quotechar.forall(_ < 0x80)) {
-      graft.functions.TokenizeExpr.tokenize(line, delims, quotechar.headOption)
-    } else {
-      // the native scanner compares raw UTF-8 bytes; a non-ASCII delim
-      // or quotechar would truncate to a byte that can spuriously match
-      // UTF-8 continuation bytes
-      val split: String => Vector[String] = quotechar.headOption match {
-        case Some(q) => quotedSplit(_, delims, q)
-        case None => simpleSplit(_, delims)
-      }
-      udf((s: String) => if (s == null) Vector.empty[String] else split(s)).apply(line)
-    }
 }
