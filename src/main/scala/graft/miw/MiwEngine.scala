@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, FloatType}
 
-import graft.functions.{LineFields, UnionCount}
+import graft.functions.{LineFields, ValueCounts}
 
 /** Compiles a [[LogFormat]] into a declarative Spark plan:
   *
@@ -26,7 +26,10 @@ import graft.functions.{LineFields, UnionCount}
   * codegen, as does any operator holding one of the two evtx blob
   * UDFs. The bounds filter and the per-field projection above it,
   * including the native cast/URL/time kernels of [[FieldKernels]],
-  * are whole-stage codegen'd.
+  * are whole-stage codegen'd. String union and union_count fields
+  * merge in one native aggregate, [[graft.functions.ValueCounts]]: a
+  * mutable value → count map per group whose `eval` already returns
+  * the sorted arrays, so no projection follows the aggregate.
   *
   * Known, documented divergences from the reference (SURVEY §7.4):
   * union arrays are canonically sorted (reference: nondeterministic
@@ -56,6 +59,11 @@ object MiwEngine {
   private val KEY = "__miw_key"
   private val NTOK = "__miw_ntok"
   private val LINE = "__miw_line"
+  /** Prefix of the struct column a union_count field aggregates to. */
+  private val UC = "__uc_"
+
+  /** Field types whose union dedups; the others concatenate. */
+  private val StringKinds = Set("string", "date", "time", "url")
 
   /** Dictionaries above this size no longer inline into an isin
     * predicate (which would bloat the plan and its broadcast): exact
@@ -248,10 +256,10 @@ object MiwEngine {
 
   // -------------------------------------------------------- aggregate
 
-  /** Aggregate columns of one non-ratio field, shared by the batch and
-    * streaming engines. The collect-style aggregations (union,
-    * union_count) are [[aggregate]]'s own; here they fall through to
-    * min like any unknown aggregation. */
+  /** Aggregate column(s) of one non-ratio field, shared by the batch and
+    * streaming engines. A union_count field aggregates to one
+    * `struct<values, counts>` column, which [[splitValueCounts]] turns
+    * into the emitted pair. */
   private[graft] def fieldAggs(f: FieldSpec): Seq[Column] = {
     val c = fcol(f.name)
     // non-aggregated filter_contain indicators force sum
@@ -272,9 +280,27 @@ object MiwEngine {
         val sxx = sum(c * c).cast(DoubleType)
         val n = count(c).cast(DoubleType)
         Seq(((sxx - (sx * sx) / n) / greatest(lit(1.0), n - 1)).as(f.name))
+      // union: strings dedup, numerics concatenate
+      // (log_record.cc:57-142); both canonically sorted for determinism
+      case "union" if StringKinds(f.ftype) => Seq(ValueCounts.values(c).as(f.name))
+      case "union" => Seq(array_sort(collect_list(c)).as(f.name))
+      case "union_count" => Seq(ValueCounts(c.cast("string")).as(UC + f.name))
       case _ => Seq(min(c).as(f.name))
     }
   }
+
+  /** Each union_count struct → `<name>` (sorted values) and
+    * `<name>_count` (their counts) in its place
+    * (log_record.cc:611-615). */
+  private[graft] def splitValueCounts(out: DataFrame): DataFrame =
+    if (!out.columns.exists(_.startsWith(UC))) out
+    else out.select(out.columns.toSeq.flatMap { n =>
+      if (!n.startsWith(UC)) Seq(fcol(n))
+      else {
+        val name = n.stripPrefix(UC)
+        Seq(fcol(n).getField("values").as(name), fcol(n).getField("counts").as(name + "_count"))
+      }
+    }: _*)
 
   /** Grouped aggregation per the per-field aggregation configs, plus the
     * implicit `logs` row count and post-agg ratio columns
@@ -294,21 +320,9 @@ object MiwEngine {
       val c = fcol(f.name)
       val aggregation =
         if (f.filterType == "contain" || !f.aggregated) "" else f.aggregation
-      aggregation match {
-        case "union" =>
-          // strings dedup, numerics concatenate (log_record.cc:57-142);
-          // both canonically sorted for determinism
-          if (Set("string", "date", "time", "url").contains(f.ftype))
-            aggs += array_sort(collect_set(c)).as(f.name)
-          else
-            aggs += array_sort(collect_list(c)).as(f.name)
-        case "union_count" =>
-          aggs += UnionCount(c.cast("string")).as("__uc_" + f.name)
-        case _ =>
-          aggs ++= fieldAggs(f)
-          if ((aggregation == "mean" || aggregation == "variance") && ratioRefs(f.name))
-            aggs += sum(c).as("__sum_" + f.name)
-      }
+      aggs ++= fieldAggs(f)
+      if ((aggregation == "mean" || aggregation == "variance") && ratioRefs(f.name))
+        aggs += sum(c).as("__sum_" + f.name)
       if (f.preprocessing == "evtxcsv" || f.preprocessing == "evtxcsv2")
         // maps are not orderable: deterministic pick via min_by on the
         // source string value (reference keeps a thread-race "first")
@@ -335,16 +349,7 @@ object MiwEngine {
       } else parsed.groupBy(col(KEY)).agg(aggs.head, aggs.tail.toSeq: _*)
     out = if (fieldNamedId) out.drop(KEY) else out.withColumnRenamed(KEY, "id")
 
-    // union_count maps → parallel sorted value/count arrays
-    // (emitted as <name> + <name>_count, log_record.cc:611-615)
-    for (f <- fields if f.aggregation == "union_count" && f.aggregated) {
-      val m = fcol("__uc_" + f.name)
-      val keys = array_sort(map_keys(m))
-      out = out
-        .withColumn(f.name, keys)
-        .withColumn(f.name + "_count", transform(keys, k => element_at(m, k)))
-        .drop("__uc_" + f.name)
-    }
+    out = splitValueCounts(out)
 
     // ratio: float32 division, 0 when denominator is 0, widened to
     // double on output (log_record.cc:747-823; float artifacts are part

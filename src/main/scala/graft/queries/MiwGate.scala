@@ -4,13 +4,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
 import graft.Tables._
-import graft.functions.UnionCount
+import graft.functions.ValueCounts
 import graft.miw.{FieldExprs, LogFormat, MiwEngine}
 
 /** Correctness-gate coverage for the MIW engine itself and the
   * remaining reference aggregations/transforms that q01–q22 exercise
   * only via plain DataFrame plans: the full format-driven pipeline
-  * end-to-end, the UnionCount Aggregator, naive variance, URL
+  * end-to-end, the ValueCounts kernel, naive variance, URL
   * normalization, and unpadded date bucketing.
   *
   * The end-to-end query (q34) synthesizes delimited log lines from
@@ -51,15 +51,16 @@ object MiwGate {
              '0000-00-00T00:00:00Z' AS std_date_dt
       FROM events GROUP BY event_type ORDER BY id""")),
 
-    // union_count via the custom Aggregator (vs q14's two-phase SQL)
+    // union_count via the ValueCounts kernel (vs q14's two-phase SQL);
+    // the rendered "k:cnt" strings are sorted, as the oracle sorts them
     Q("q35_union_count_agg", (s, d) => {
-      val m = UnionCount((col("user_id") % 20).cast("string"))
+      val m = ValueCounts((col("user_id") % 20).cast("string"))
       t(s, d, "events")
         .groupBy(col("event_type"))
         .agg(m.as("m"))
         .select(col("event_type"),
-          concat_ws(",", array_sort(transform(map_entries(col("m")),
-            e => concat(e.getField("key"), lit(":"), e.getField("value"))))).as("bucket_counts"))
+          concat_ws(",", array_sort(zip_with(col("m.values"), col("m.counts"),
+            (k, n) => concat(k, lit(":"), n)))).as("bucket_counts"))
         .orderBy(col("event_type"))
     }, Some("""
       SELECT event_type,

@@ -18,26 +18,28 @@ import graft.miw.{LogFormat, MiwEngine}
   *
   * `parse` is reused verbatim from the batch engine: every per-row
   * transform (tokenize, casts, bucketing, matches) is
-  * streaming-compatible by construction. So is every per-field
-  * aggregate except the collect-style ones (union/union_count), which
-  * need `flatMapGroupsWithState` and are intentionally not offered
-  * here — at 100 TB/day you do not want unbounded per-key sets in the
-  * state store.
+  * streaming-compatible by construction, and so is every per-field
+  * aggregate, union and union_count included: their value-count
+  * buffers are serialized into the state store like any other.
+  *
+  * State bounding is the caller's choice. An unwindowed union or
+  * union_count over an unbounded value domain (URLs, user agents)
+  * grows each key's state without limit; [[windowedAggregateStream]]
+  * evicts a window's state once the watermark passes it.
   */
 object MiwStreaming {
 
   /** Running keyed aggregation over a (possibly unbounded) line
     * stream: `logs` first, then each non-ratio field's columns exactly
     * as the batch `MiwEngine.aggregate` emits them (count adds
-    * `<name>_count`, variance is the reference's naive variance). It
-    * drops ratio fields and output-time finalization, and a union or
-    * union_count field keeps only the min of its values instead of the
-    * batch engine's sorted set or value counts. */
+    * `<name>_count`, variance is the reference's naive variance, union
+    * is the sorted set and union_count adds `<name>_count`). It drops
+    * ratio fields and output-time finalization. */
   def aggregateStream(fmt: LogFormat, lines: DataFrame): DataFrame = {
     val aggs = count(lit(1)).as("logs") +:
       fmt.resolvedFields.filter(_.aggregation != "ratio").flatMap(MiwEngine.fieldAggs)
-    MiwEngine.parse(fmt, lines).groupBy(col("__miw_key").as("id"))
-      .agg(aggs.head, aggs.tail: _*)
+    MiwEngine.splitValueCounts(MiwEngine.parse(fmt, lines)
+      .groupBy(col("__miw_key").as("id")).agg(aggs.head, aggs.tail: _*))
   }
 
   /** Event-time tumbling-window variant with a watermark: the

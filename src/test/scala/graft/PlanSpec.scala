@@ -116,11 +116,11 @@ class PlanSpec extends AnyFunSuite {
     // TermCounts, TokenStats, BlockHash, IScale, WordNGrams, LongDot,
     // …) replace every scan-stage instance. Whitelist: lambdas that
     // provably run on TINY inputs after the data has been reduced —
-    // q34/q35 transform a per-group count map AFTER the aggregate
-    // (5 event-type rows), q68 flips bits on the broadcast query side
-    // only (|Q| rows).
+    // q35 renders its per-group value counts as "k:cnt" strings AFTER
+    // the aggregate (5 event-type rows), q68 flips bits on the
+    // broadcast query side only (|Q| rows).
     val tinyInputLambdas =
-      Set("q34_miw_pipeline", "q35_union_count_agg", "q68_ann_multiprobe",
+      Set("q35_union_count_agg", "q68_ann_multiprobe",
         "q108_ann_recall") // q68's probe flip on the broadcast query side
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) if !tinyInputLambdas(name) =>

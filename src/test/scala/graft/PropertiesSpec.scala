@@ -4,7 +4,6 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.UnionCount
 import graft.miw.{Output, Tokenizer}
 
 /** Property-based invariants. The merge laws are what make the
@@ -22,32 +21,8 @@ class PropertiesSpec extends AnyFunSuite {
     }
   private def forAll[A, B](g1: Gen[A], g2: Gen[B])(f: (A, B) => Unit): Unit =
     forAll(Gen.zip(g1, g2))(t => f(t._1, t._2))
-  private def forAll[A, B, C](g1: Gen[A], g2: Gen[B], g3: Gen[C])(f: (A, B, C) => Unit): Unit =
-    forAll(Gen.zip(g1, g2, g3))(t => f(t._1, t._2, t._3))
 
   private val word = Gen.nonEmptyListOf(Gen.alphaNumChar).map(_.mkString)
-
-  test("UnionCount merge is commutative, associative, with identity zero") {
-    val mapGen = Gen.mapOf(Gen.zip(word, Gen.choose(1L, 100L)))
-    forAll(mapGen, mapGen, mapGen) { (a, b, c) =>
-      assert(UnionCount.merge(a, b) == UnionCount.merge(b, a))
-      assert(UnionCount.merge(UnionCount.merge(a, b), c) ==
-        UnionCount.merge(a, UnionCount.merge(b, c)))
-      assert(UnionCount.merge(a, UnionCount.zero) == a)
-    }
-  }
-
-  test("UnionCount reduce-then-merge equals any split of the input") {
-    forAll(Gen.listOf(word), Gen.choose(0, 50)) { (vals, cut0) =>
-      val cut = if (vals.isEmpty) 0 else cut0 % (vals.length + 1)
-      val (l, r) = vals.splitAt(cut)
-      val whole = vals.foldLeft(UnionCount.zero)(UnionCount.reduce)
-      val split = UnionCount.merge(
-        l.foldLeft(UnionCount.zero)(UnionCount.reduce),
-        r.foldLeft(UnionCount.zero)(UnionCount.reduce))
-      assert(whole == split)
-    }
-  }
 
   test("simpleSplit: tokens contain no delimiters, no empties, and preserve content") {
     val delims = ",;"

@@ -125,6 +125,37 @@ class MiwStreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("union and union_count fields stream exactly what the batch engine emits") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val fmt = LogFormat.parse(
+      """{"format_name":"t","delims":",","fields":[
+          {"name":"k","pos":0,"type":"string","key":true},
+          {"name":"u","pos":1,"type":"string","aggregated":true,"aggregation":"union"},
+          {"name":"uc","pos":1,"type":"url","aggregated":true,"aggregation":"union_count"},
+          {"name":"n","pos":2,"type":"int","aggregated":true,"aggregation":"union"},
+          {"name":"nc","pos":2,"type":"int","aggregated":true,"aggregation":"union_count"}]}""")
+    val batches = Seq(Seq("a,x,1", "a,y,4", "b,z,10", "a,x,4"),
+      Seq("a,w,7", "c,漢,7", "b,z,2", "a,y,1"))
+    val in = MemoryStream[String]
+    val q = MiwStreaming.aggregateStream(fmt, in.toDF())
+      .writeStream.format("memory").queryName("miw_union")
+      .outputMode("complete").start()
+    try {
+      batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      val streamed = spark.table("miw_union")
+      assert(streamed.columns.toSeq ==
+        Seq("id", "logs", "k", "u", "uc", "uc_count", "n", "nc", "nc_count"))
+      val batch = graft.miw.MiwEngine.runOnLines(spark, fmt, batches.flatten)
+        .select(streamed.columns.map(org.apache.spark.sql.functions.col): _*)
+      val rows = (df: org.apache.spark.sql.DataFrame) => df.collect().map(_.toSeq).toSet
+      assert(rows(streamed) == rows(batch))
+      assert(streamed.filter("id = 'a'").select("u", "uc", "uc_count", "n", "nc", "nc_count")
+        .head().toSeq == Seq(Seq("w", "x", "y"), Seq("w", "x", "y"), Seq(1L, 2L, 2L),
+          Seq(1L, 1L, 4L, 4L, 7L), Seq("1", "4", "7"), Seq(2L, 2L, 1L)))
+    } finally q.stop()
+  }
+
   test("event-time tumbling window with watermark") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
