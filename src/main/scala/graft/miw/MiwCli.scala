@@ -69,14 +69,22 @@ object MiwCli {
         case -1 => (raw, None)
         case k  => (raw.substring(0, k), Some(raw.substring(k + 1)))
       }
-      def value(): String = inline.getOrElse { i += 1; argv(i) }
+      def value(): String = inline.getOrElse {
+        i += 1
+        require(i < argv.length, s"-$flag needs a value")
+        argv(i)
+      }
+      def intValue(): Int = {
+        val v = value()
+        v.toIntOption.getOrElse(throw new IllegalArgumentException(s"-$flag needs an integer: $v"))
+      }
       flag match {
         case "fnames"        => a = a.copy(fnames = value().split(",").filter(_.nonEmpty).toSeq)
         case "format_name"   => a = a.copy(formatName = value())
         case "appname"       => a = a.copy(appname = value())
         case "output_format" => a = a.copy(outputFormat = value())
         case "ofname"        => a = a.copy(ofname = value())
-        case "ndisp"         => a = a.copy(ndisp = value().toInt)
+        case "ndisp"         => a = a.copy(ndisp = intValue())
         case "skip_header"   => a = a.copy(skipHeader = boolVal(inline))
         case "store_content" => a = a.copy(storeContent = boolVal(inline))
         case "merge_results" => a = a.copy(mergeResults = boolVal(inline))
@@ -84,7 +92,7 @@ object MiwCli {
         // reference behavior (strcasecmp btree) as an opt-in flag
         case "case_insensitive_keys" => a = a.copy(caseInsensitiveKeys = boolVal(inline))
         case "solr_url"        => a = a.copy(solrUrl = value())
-        case "solr_batch_size" => a = a.copy(solrBatchSize = value().toInt)
+        case "solr_batch_size" => a = a.copy(solrBatchSize = intValue())
         case "quiet"         => a = a.copy(quiet = boolVal(inline))
         case "nprocs" | "map_tasks" | "reduce_tasks" | "memory_factor" |
              "nchunks_split" => if (inline.isEmpty) i += 1 // consumed, no-op

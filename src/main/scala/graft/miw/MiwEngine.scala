@@ -256,11 +256,10 @@ object MiwEngine {
 
   // -------------------------------------------------------- aggregate
 
-  /** Aggregate column(s) of one non-ratio field, shared by the batch and
-    * streaming engines. A union_count field aggregates to one
-    * `struct<values, counts>` column, which [[splitValueCounts]] turns
-    * into the emitted pair. */
-  private[graft] def fieldAggs(f: FieldSpec): Seq[Column] = {
+  /** Aggregate column(s) of one non-ratio field. A union_count field
+    * aggregates to one `struct<values, counts>` column, which
+    * [[aggregate]] splits into the emitted pair. */
+  private def fieldAggs(f: FieldSpec): Seq[Column] = {
     val c = fcol(f.name)
     // non-aggregated filter_contain indicators force sum
     // (log_record.cc:296-299)
@@ -289,23 +288,16 @@ object MiwEngine {
     }
   }
 
-  /** Each union_count struct → `<name>` (sorted values) and
-    * `<name>_count` (their counts) in its place
-    * (log_record.cc:611-615). */
-  private[graft] def splitValueCounts(out: DataFrame): DataFrame =
-    if (!out.columns.exists(_.startsWith(UC))) out
-    else out.select(out.columns.toSeq.flatMap { n =>
-      if (!n.startsWith(UC)) Seq(fcol(n))
-      else {
-        val name = n.stripPrefix(UC)
-        Seq(fcol(n).getField("values").as(name), fcol(n).getField("counts").as(name + "_count"))
-      }
-    }: _*)
-
   /** Grouped aggregation per the per-field aggregation configs, plus the
     * implicit `logs` row count and post-agg ratio columns
-    * (miw/log_record.cc:251-324 merge kernel + :600-679 finalize). */
-  def aggregate(fmt: LogFormat, parsed: DataFrame, opts: Options = Options()): DataFrame = {
+    * (miw/log_record.cc:251-324 merge kernel + :600-679 finalize).
+    * Batch jobs and both [[graft.streaming.MiwStreaming]] entry points
+    * run this one builder, as the reference's `-merge_results` loop
+    * reuses its merge and finalize (miw/job.cc:197-226). `groupCols`
+    * are grouped on beside the key and kept (the windowed stream's
+    * window). */
+  def aggregate(fmt: LogFormat, parsed: DataFrame, opts: Options = Options(),
+                groupCols: Seq[Column] = Nil): DataFrame = {
     val fields = fmt.resolvedFields
     val aggs = scala.collection.mutable.ArrayBuffer.empty[Column]
     aggs += count(lit(1)).as("logs")
@@ -343,13 +335,22 @@ object MiwEngine {
         // min over merged originals (the reference keeps whichever
         // casing a thread inserted first — a race we don't reproduce)
         val all = min(col(KEY)).as(KEY) +: aggs.toSeq
-        parsed.groupBy(lower(col(KEY)).as("__miw_cikey"))
+        parsed.groupBy(lower(col(KEY)).as("__miw_cikey") +: groupCols: _*)
           .agg(all.head, all.tail: _*)
           .drop("__miw_cikey")
-      } else parsed.groupBy(col(KEY)).agg(aggs.head, aggs.tail.toSeq: _*)
+      } else parsed.groupBy(col(KEY) +: groupCols: _*).agg(aggs.head, aggs.tail.toSeq: _*)
     out = if (fieldNamedId) out.drop(KEY) else out.withColumnRenamed(KEY, "id")
 
-    out = splitValueCounts(out)
+    // each union_count struct → `<name>` (sorted values) and
+    // `<name>_count` (their counts) in its place (log_record.cc:611-615)
+    if (out.columns.exists(_.startsWith(UC)))
+      out = out.select(out.columns.toSeq.flatMap { n =>
+        if (!n.startsWith(UC)) Seq(fcol(n))
+        else {
+          val name = n.stripPrefix(UC)
+          Seq(fcol(n).getField("values").as(name), fcol(n).getField("counts").as(name + "_count"))
+        }
+      }: _*)
 
     // ratio: float32 division, 0 when denominator is 0, widened to
     // double on output (log_record.cc:747-823; float artifacts are part

@@ -61,28 +61,20 @@ import graft.functions.ExactCols._
   */
 object Dedup {
 
+  // The gate-calibrated parameters (see object scaladoc).
   private val NH = 8      // minhash functions
   private val BANDS = 4   // bands of 2 rows
   private val SIMBITS = 30
+  private val SHINGLE = 3 // words per shingle
+  private val JACCARD = 0.5 // near-dup threshold on verified jaccard
+  private val MAXHAM = 3  // simhash near-dup hamming bound
 
-  /** Tuning for the MinHash/SimHash near-dup pipelines. Defaults are
-    * the gate-calibrated parameters (see object scaladoc). */
+  /** Tuning for the MinHash/SimHash near-dup pipelines. */
   final case class LshConfig(
-      numHashes: Int = NH,
-      bands: Int = BANDS,
-      shingleSize: Int = 3,
-      jaccardThreshold: Double = 0.5,
-      simBits: Int = SIMBITS,
-      maxHamming: Int = 3,
       /** Skew guard: keep at most this many members per band/block
         * bucket (deterministic first-by-id). */
       maxBucketSize: Int = 256) {
-    require(numHashes > 0 && bands > 0 && numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of bands ($bands) " +
-        "or trailing hash functions would be silently unused")
-    require(simBits >= maxHamming + 1,
-      s"simBits ($simBits) must be ≥ maxHamming+1 (${maxHamming + 1}) for pigeonhole blocks")
-    require(shingleSize > 0 && maxBucketSize > 1, "shingleSize/maxBucketSize out of range")
+    require(maxBucketSize > 1, "maxBucketSize out of range")
   }
 
   // ---- Spark-side building blocks (explode → codegen aggregate) ----
@@ -119,36 +111,36 @@ object Dedup {
   /** doc_id → mh0..mh{n−1} for docs with ≥1 shingle. Exact-clone
     * collapsed: signatures compute once per distinct text and expand
     * through the group table (identical text ⇒ identical signature). */
-  def minhashSignatures(docs: DataFrame, cfg: LshConfig = LshConfig()): DataFrame = {
+  def minhashSignatures(docs: DataFrame): DataFrame = {
     val (members, reps) = cloneGroups(docs)
-    members.join(minhashSignaturesDistinct(reps, cfg)
+    members.join(minhashSignaturesDistinct(reps)
         .withColumnRenamed("doc_id", "gid"), "gid")
       .select(col("doc_id") +:
-        (0 until cfg.numHashes).map(j => col(s"mh$j")): _*)
+        (0 until NH).map(j => col(s"mh$j")): _*)
   }
 
   /** [[minhashSignatures]] without the collapse — the primitive run
     * over an already-distinct corpus (band table, collapsed callers). */
-  private def minhashSignaturesDistinct(docs: DataFrame, cfg: LshConfig): DataFrame = {
-    val aggs = mhAggs(cfg.numHashes)
-    shingleHashes(docs, cfg.shingleSize, distinct = true)
+  private def minhashSignaturesDistinct(docs: DataFrame): DataFrame = {
+    val aggs = mhAggs(NH)
+    shingleHashes(docs, SHINGLE, distinct = true)
       .groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** doc_id → simBits-bit simhash for ALL docs (empty-shingle docs →
+  /** doc_id → SIMBITS-bit simhash for ALL docs (empty-shingle docs →
     * 0), exact-clone collapsed like [[minhashSignatures]]. */
-  def simhashSignatures(docs: DataFrame, cfg: LshConfig = LshConfig()): DataFrame = {
+  def simhashSignatures(docs: DataFrame): DataFrame = {
     val (members, reps) = cloneGroups(docs)
-    members.join(simhashSignaturesDistinct(reps, cfg)
+    members.join(simhashSignaturesDistinct(reps)
         .withColumnRenamed("doc_id", "gid"), "gid")
       .select(col("doc_id"), col("simhash"))
   }
 
   /** [[simhashSignatures]] without the collapse: bit-sums as plain
     * codegen'd sum() aggregates over one row per shingle occurrence. */
-  private def simhashSignaturesDistinct(docs: DataFrame, cfg: LshConfig): DataFrame =
-    simhashSigsFromOcc(shingleHashes(docs, cfg.shingleSize, distinct = false),
-      docs.select(col("doc_id")), cfg)
+  private def simhashSignaturesDistinct(docs: DataFrame): DataFrame =
+    simhashSigsFromOcc(shingleHashes(docs, SHINGLE, distinct = false),
+      docs.select(col("doc_id")))
 
   /** [[simhashSignaturesDistinct]] from a pre-built per-OCCURRENCE
     * shingle-hash table `occ` = (doc_id, h), one row per shingle
@@ -156,16 +148,15 @@ object Dedup {
     * simhash 0). Shared-feature-pass callers ([[dedupRouteMatrix]])
     * hand in one checkpointed occ that also derives the jaccard/
     * minhash hash set. */
-  private def simhashSigsFromOcc(occ: DataFrame, docIds: DataFrame,
-                                 cfg: LshConfig): DataFrame = {
-    val bitSums = (0 until cfg.simBits).map { k =>
+  private def simhashSigsFromOcc(occ: DataFrame, docIds: DataFrame): DataFrame = {
+    val bitSums = (0 until SIMBITS).map { k =>
       sum(shiftright(col("h"), k).bitwiseAND(lit(1L))).as(s"c$k")
     }
     val bits = occ
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n"), bitSums: _*)
     val sim = bits.select(col("doc_id"),
-      (0 until cfg.simBits).map { k =>
+      (0 until SIMBITS).map { k =>
         when(lit(2) * col(s"c$k") - col("n") > 0, lit(1L << k)).otherwise(lit(0L))
       }.reduce(_ + _).as("simhash"))
     docIds.join(sim, Seq("doc_id"), "left")
@@ -176,9 +167,8 @@ object Dedup {
     * subtree callers): expand per-rep signatures through the FULL
     * (gid, doc_id) group table — empty-shingle reps already carry
     * simhash 0 from [[simhashSignaturesDistinct]]'s left join. */
-  private def simhashSignaturesCollapsed(members: DataFrame, reps: DataFrame,
-                                         cfg: LshConfig): DataFrame =
-    members.join(simhashSignaturesDistinct(reps, cfg)
+  private def simhashSignaturesCollapsed(members: DataFrame, reps: DataFrame): DataFrame =
+    members.join(simhashSignaturesDistinct(reps)
         .withColumnRenamed("doc_id", "gid"), "gid")
       .select(col("doc_id"), col("simhash"))
 
@@ -196,12 +186,12 @@ object Dedup {
     val (_, reps) = cloneGroups(docs)
     val occ = reps
       .select(col("doc_id"),
-        explode(shingles(tokens(col("text")), cfg.shingleSize, distinct = false)).as("sg"))
+        explode(shingles(tokens(col("text")), SHINGLE, distinct = false)).as("sg"))
       .select(col("doc_id"), hmod(col("sg")).as("h"))
     val hset = occ.distinct()
     Seq(
-      "minhash_band_table" -> bandTable(minhashSignaturesDistinct(reps, cfg), cfg),
-      "simhash_block_table" -> blockTable(simhashSignaturesDistinct(reps, cfg), cfg),
+      "minhash_band_table" -> bandTable(minhashSignaturesDistinct(reps), cfg),
+      "simhash_block_table" -> blockTable(simhashSignaturesDistinct(reps), cfg),
       "jaccard_hset" -> hset,
       "shingle_occ" -> occ)
   }
@@ -222,8 +212,8 @@ object Dedup {
   /** One row per (doc, band): banded signature, oversized buckets
     * truncated to cfg.maxBucketSize members. */
   private def bandTable(sigs: DataFrame, cfg: LshConfig): DataFrame = {
-    val rpb = cfg.numHashes / cfg.bands
-    val bandStructs = (0 until cfg.bands).map { b =>
+    val rpb = NH / BANDS
+    val bandStructs = (0 until BANDS).map { b =>
       struct(lit(b).as("band"),
         concat_ws("_",
           (0 until rpb).map(r => col(s"mh${b * rpb + r}").cast("string")): _*).as("sig"))
@@ -264,7 +254,7 @@ object Dedup {
                    brute: Boolean = false): DataFrame =
     if (brute) nearDupPairsDistinct(docs, cfg, brute = true)
     else {
-      val hasShingles = size(tokens(col("text"))) >= cfg.shingleSize
+      val hasShingles = size(tokens(col("text"))) >= SHINGLE
       val shingled = docs.filter(hasShingles)
         .withColumn("gid",
           min(col("doc_id")).over(Window.partitionBy(col("text"))))
@@ -307,7 +297,7 @@ object Dedup {
                                    brute: Boolean): DataFrame = {
     val shTbl = docs
       .select(col("doc_id"),
-        shingles(tokens(col("text")), cfg.shingleSize, distinct = true).as("sh"))
+        shingles(tokens(col("text")), SHINGLE, distinct = true).as("sh"))
       .filter(size(col("sh")) > 0)
     val cand =
       if (brute)
@@ -330,7 +320,7 @@ object Dedup {
         // (doc_id, band, sig) table, ~2.5 MB at sf0.1, vs re-running
         // the signature subtree per side (md5 over every shingle).
         collidingPairs(
-          bandTable(minhashSignaturesDistinct(docs, cfg), cfg).cut(),
+          bandTable(minhashSignaturesDistinct(docs), cfg).cut(),
           Seq("band", "sig"))
       }
     cand
@@ -339,7 +329,7 @@ object Dedup {
       .withColumn("jaccard",
         size(array_intersect(col("ash"), col("bsh"))).cast(DoubleType) /
           size(array_union(col("ash"), col("bsh"))))
-      .filter(col("jaccard") >= cfg.jaccardThreshold)
+      .filter(col("jaccard") >= JACCARD)
       .select(col("a_id"), col("b_id"), col("jaccard"))
   }
 
@@ -371,31 +361,31 @@ object Dedup {
     val (_, reps) = cloneGroups(docs)
     val shTbl = reps
       .select(col("doc_id"),
-        shingles(tokens(col("text")), cfg.shingleSize, distinct = true).as("sh"))
+        shingles(tokens(col("text")), SHINGLE, distinct = true).as("sh"))
       .filter(size(col("sh")) > 0)
-    val sigs = minhashSignaturesDistinct(reps, cfg).cut() // band table + both pair sides
+    val sigs = minhashSignaturesDistinct(reps).cut() // band table + both pair sides
     // cut: the colliding self-join reads the capped band table twice —
     // without it the band explode + cap window (one exchange) re-run
     // per side even over the checkpointed sigs
     val cand = collidingPairs(bandTable(sigs, cfg).cut(), Seq("band", "sig"))
     val aSig = sigs.select(col("doc_id").as("a_id") +:
-      (0 until cfg.numHashes).map(j => col(s"mh$j").as(s"amh$j")): _*)
+      (0 until NH).map(j => col(s"mh$j").as(s"amh$j")): _*)
     val bSig = sigs.select(col("doc_id").as("b_id") +:
-      (0 until cfg.numHashes).map(j => col(s"mh$j").as(s"bmh$j")): _*)
-    val nMatch = (0 until cfg.numHashes).map(j =>
+      (0 until NH).map(j => col(s"mh$j").as(s"bmh$j")): _*)
+    val nMatch = (0 until NH).map(j =>
       when(col(s"amh$j") === col(s"bmh$j"), 1L).otherwise(0L)).reduce(_ + _)
     cand.join(aSig, "a_id").join(bSig, "b_id")
       .withColumn("n_match", nMatch)
       .join(shTbl.select(col("doc_id").as("a_id"), col("sh").as("ash")), "a_id")
       .join(shTbl.select(col("doc_id").as("b_id"), col("sh").as("bsh")), "b_id")
       .select(col("a_id"), col("b_id"), col("n_match"),
-        (col("n_match").cast(DoubleType) / cfg.numHashes).as("est_jaccard"),
+        (col("n_match").cast(DoubleType) / NH).as("est_jaccard"),
         (size(array_intersect(col("ash"), col("bsh"))).cast(DoubleType) /
           size(array_union(col("ash"), col("bsh")))).as("jaccard"))
   }
 
   /** Dedup threshold-sweep report — the tuning table behind picking
-    * cfg.jaccardThreshold: for each candidate threshold (‰), how many
+    * JACCARD: for each candidate threshold (‰), how many
     * near-dup pairs survive, how many distinct documents they touch,
     * and a pair-membership checksum. ONE rep-level candidate pair
     * table (q105's collapsed LSH surface) is cut() once and feeds
@@ -411,12 +401,12 @@ object Dedup {
     val (_, reps) = cloneGroups(docs)
     val shTbl = reps
       .select(col("doc_id"),
-        shingles(tokens(col("text")), cfg.shingleSize, distinct = true).as("sh"))
+        shingles(tokens(col("text")), SHINGLE, distinct = true).as("sh"))
       .filter(size(col("sh")) > 0)
     // cut: one signature + cap pass instead of one per self-join side
     // (the nearDupPairsDistinct band-table rule)
     val cand = collidingPairs(
-      bandTable(minhashSignaturesDistinct(reps, cfg), cfg).cut(),
+      bandTable(minhashSignaturesDistinct(reps), cfg).cut(),
       Seq("band", "sig"))
     val pairs = cand
       .join(shTbl.select(col("doc_id").as("a_id"), col("sh").as("ash")), "a_id")
@@ -447,7 +437,7 @@ object Dedup {
         coalesce(col("pair_checksum"), lit(0L)).as("pair_checksum"))
   }
 
-  /** SimHash near-dup pairs at hamming ≤ cfg.maxHamming via
+  /** SimHash near-dup pairs at hamming ≤ MAXHAM via
     * (maxHamming+1)-block pigeonhole — bucketed equi-join on block
     * value (capped), never n² pairs. The SIGNATURE stage rides the
     * clone collapse (via [[simhashSignatures]]); the pair stage
@@ -457,7 +447,7 @@ object Dedup {
     * measured 8.1 s collapsed-expanded vs 4.4 s capped-buckets at
     * sf10, so the bucket form stays. */
   def simhashPairs(docs: DataFrame, cfg: LshConfig = LshConfig()): DataFrame =
-    simhashPairsFromSigs(simhashSignatures(docs, cfg), cfg)
+    simhashPairsFromSigs(simhashSignatures(docs), cfg)
 
   /** [[simhashPairs]] from a pre-built per-doc signature table
     * (doc_id, simhash): the route blocks and pairs DOCS directly
@@ -467,10 +457,10 @@ object Dedup {
     * to cfg.maxBucketSize members (the simhash counterpart of
     * [[bandTable]]). */
   private def blockTable(sim: DataFrame, cfg: LshConfig): DataFrame = {
-    val nb = cfg.maxHamming + 1
-    val w = (cfg.simBits + nb - 1) / nb // block width (last may be narrower)
+    val nb = MAXHAM + 1
+    val w = (SIMBITS + nb - 1) / nb // block width (last may be narrower)
     val blockStructs = (0 until nb).map { bi =>
-      val width = math.min(w, cfg.simBits - bi * w)
+      val width = math.min(w, SIMBITS - bi * w)
       val mask = (1L << width) - 1
       struct(lit(bi).as("bi"),
         shiftright(col("simhash"), bi * w).bitwiseAND(lit(mask)).as("bv"))
@@ -492,7 +482,7 @@ object Dedup {
         col("a.simhash").as("ah"), col("b.simhash").as("bh"))
       .distinct()
       .withColumn("hamming", bit_count(col("ah").bitwiseXOR(col("bh"))).cast(LongType))
-      .filter(col("hamming") <= cfg.maxHamming)
+      .filter(col("hamming") <= MAXHAM)
       .select(col("a_id"), col("b_id"), col("hamming"))
   }
 
@@ -586,11 +576,10 @@ object Dedup {
 
   /** Exposed chooser (spec surface): which mode `mode = "auto"` would
     * pick for this corpus. */
-  def jaccardMode(docs: DataFrame, cfg: LshConfig = LshConfig(),
-                  maxDocFreq: Int = 100): String = {
+  def jaccardMode(docs: DataFrame, maxDocFreq: Int = 100): String = {
     val dfs = docs
       .select(col("doc_id"),
-        explode(shingles(tokens(col("text")), cfg.shingleSize, distinct = true)).as("sg"))
+        explode(shingles(tokens(col("text")), SHINGLE, distinct = true)).as("sg"))
       .select(col("doc_id"), hmod(col("sg")).as("h"))
       .distinct()
       .groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -611,7 +600,6 @@ object Dedup {
     * AllPairs/PPJoin prefix filter, `"auto"` (default) = one cheap
     * df-profile pass picks per [[jaccardMode]]'s calibrated rule. */
   def ngramJaccardPairs(docs: DataFrame, threshold: Double,
-                        cfg: LshConfig = LshConfig(),
                         maxDocFreq: Int = 100,
                         mode: String = "auto"): DataFrame = {
     // Exact-clone collapse (same argument as [[deduplicate]]): jaccard
@@ -628,7 +616,7 @@ object Dedup {
     // never pair (unchanged); intra-group expansion applies only to
     // groups with ≥ 1 surviving shingle, matching the uncollapsed
     // behavior for all-stop-shingle docs.
-    val hasShingles = size(tokens(col("text"))) >= cfg.shingleSize
+    val hasShingles = size(tokens(col("text"))) >= SHINGLE
     val shingled = docs.filter(hasShingles)
       .withColumn("gid",
         min(col("doc_id")).over(Window.partitionBy(col("text"))))
@@ -636,7 +624,7 @@ object Dedup {
       shingled.select(col("gid"), col("doc_id")),
       shingled.filter(col("doc_id") === col("gid"))
         .select(col("doc_id"), col("text")),
-      threshold, cfg, maxDocFreq, mode)
+      threshold, maxDocFreq, mode)
   }
 
   /** [[ngramJaccardPairs]] from a pre-built clone collapse:
@@ -645,8 +633,7 @@ object Dedup {
     * (shared-collapse callers hand in checkpointed tables; the
     * standalone wrapper above builds its own). */
   private def ngramJaccardPairsCollapsed(members0: DataFrame, reps: DataFrame,
-                                         threshold: Double, cfg: LshConfig,
-                                         maxDocFreq: Int,
+                                         threshold: Double, maxDocFreq: Int,
                                          mode: String): DataFrame = {
     val members = members0
       .cut() // referenced 4x (intra self-join + expansion)
@@ -654,7 +641,7 @@ object Dedup {
     // shingling + distinct pass otherwise runs once per reference
     val hset = reps
       .select(col("doc_id"),
-        explode(shingles(tokens(col("text")), cfg.shingleSize, distinct = true)).as("sg"))
+        explode(shingles(tokens(col("text")), SHINGLE, distinct = true)).as("sg"))
       .select(col("doc_id"), hmod(col("sg")).as("h"))
       .distinct()
       .cut()
@@ -775,11 +762,10 @@ object Dedup {
     * pruning bound assumes the jaccard denominator — so there is no
     * prefix mode. */
   def containmentPairs(docs: DataFrame, threshold: Double,
-                       cfg: LshConfig = LshConfig(),
                        maxDocFreq: Int = 100): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"containment threshold out of range: $threshold")
-    val hasShingles = size(tokens(col("text"))) >= cfg.shingleSize
+    val hasShingles = size(tokens(col("text"))) >= SHINGLE
     val shingled = docs.filter(hasShingles)
       .withColumn("gid",
         min(col("doc_id")).over(Window.partitionBy(col("text"))))
@@ -791,7 +777,7 @@ object Dedup {
     // shingling + distinct pass otherwise runs once per reference
     val hset = reps
       .select(col("doc_id"),
-        explode(shingles(tokens(col("text")), cfg.shingleSize, distinct = true)).as("sg"))
+        explode(shingles(tokens(col("text")), SHINGLE, distinct = true)).as("sg"))
       .select(col("doc_id"), hmod(col("sg")).as("h"))
       .distinct()
       .cut()
@@ -845,14 +831,14 @@ object Dedup {
     * copies"). Shingle-less docs report (0, 0, 0.0). The fraction is
     * ONE IEEE division of two exact int64 counts — bit-identical
     * across engines and partitionings. */
-  def dupNgramStats(docs: DataFrame, cfg: LshConfig = LshConfig()): DataFrame = {
+  def dupNgramStats(docs: DataFrame): DataFrame = {
     val (members, reps) = cloneGroups(docs)
     // lazy checkpoint: hset feeds the df aggregate AND the join-back —
     // one shingling + distinct pass instead of two corpus-window
     // recomputes; one narrow row per (distinct text, shingle)
     val hset = reps
       .select(col("doc_id"),
-        explode(shingles(tokens(col("text")), cfg.shingleSize, distinct = true)).as("sg"))
+        explode(shingles(tokens(col("text")), SHINGLE, distinct = true)).as("sg"))
       .select(col("doc_id"), hmod(col("sg")).as("h"))
       .distinct().cut()
     val dfs = hset.groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -870,7 +856,7 @@ object Dedup {
   }
 
   /** Per-doc near-dup cluster labels (min doc id reachable through
-    * jaccard ≥ cfg.jaccardThreshold pairs; singletons label
+    * jaccard ≥ JACCARD pairs; singletons label
     * themselves). Same exact-clone collapse as [[deduplicate]]: LSH
     * pairs + connected components run over one representative per
     * distinct text, and every doc inherits its group's component —
@@ -883,7 +869,7 @@ object Dedup {
     * [[graft.operators.ConnectedComponents]] ("minlabel" | "star"). */
   def clusters(docs: DataFrame, cfg: LshConfig = LshConfig(),
                method: String = "minlabel"): DataFrame = {
-    val hasShingles = size(tokens(col("text"))) >= cfg.shingleSize
+    val hasShingles = size(tokens(col("text"))) >= SHINGLE
     val shingled = docs.filter(hasShingles)
       .withColumn("gid",
         min(col("doc_id")).over(Window.partitionBy(col("text"))))
@@ -978,7 +964,7 @@ object Dedup {
     * always survive — exactly the uncollapsed semantics (two
     * identical unshingleable docs both survive). */
   def deduplicate(docs: DataFrame, cfg: LshConfig = LshConfig()): DataFrame = {
-    val hasShingles = size(tokens(col("text"))) >= cfg.shingleSize
+    val hasShingles = size(tokens(col("text"))) >= SHINGLE
     // lazy checkpoint: reps feeds the band self-join (2 sides), the
     // shingle-set verify and CC vertices — one corpus groupBy instead
     // of one per reference (see [[clusters]])
@@ -1020,7 +1006,7 @@ object Dedup {
     * cluster, matching [[deduplicate]]. */
   def deduplicateKeepBest(docs: DataFrame, cfg: LshConfig = LshConfig()): DataFrame = {
     val ntok = size(tokens(col("text"))).cast(LongType)
-    val hasShingles = size(tokens(col("text"))) >= cfg.shingleSize
+    val hasShingles = size(tokens(col("text"))) >= SHINGLE
     // lazy checkpoint: reps feeds the band self-join, CC vertices AND
     // the argmax re-read (see [[deduplicate]])
     val reps = docs.filter(hasShingles)
@@ -1046,7 +1032,7 @@ object Dedup {
     * shape (process crawl N+1 against the already-kept index WITHOUT
     * re-deduplicating the index; CCNet/RefinedWeb run per-snapshot
     * passes of this form): an incoming document group is dropped iff
-    * its text near-dups (jaccard ≥ cfg.jaccardThreshold) an index
+    * its text near-dups (jaccard ≥ JACCARD) an index
     * text OR an incoming group with smaller gid; the min-id member of
     * each surviving group is kept. Decisions are per distinct TEXT
     * (group-greedy — the collapse doctrine: jaccard is a function of
@@ -1071,8 +1057,8 @@ object Dedup {
     * shape. Lazy checkpoints on every multiply-referenced table. */
   def deduplicateIncremental(index: DataFrame, incoming: DataFrame,
                              cfg: LshConfig = LshConfig()): DataFrame = {
-    val hasShingles = size(tokens(col("text"))) >= cfg.shingleSize
-    def shOf(c: Column) = shingles(tokens(c), cfg.shingleSize, distinct = true)
+    val hasShingles = size(tokens(col("text"))) >= SHINGLE
+    def shOf(c: Column) = shingles(tokens(c), SHINGLE, distinct = true)
     def jacc(a: Column, b: Column) =
       size(array_intersect(a, b)).cast(DoubleType) / size(array_union(a, b))
     val inReps = incoming.filter(hasShingles)
@@ -1083,9 +1069,9 @@ object Dedup {
     val ixReps = index.filter(hasShingles)
       .select(col("text")).distinct()
       .select(h60(col("text")).as("doc_id"), col("text")).cut()
-    val inBands = bandTable(minhashSignaturesDistinct(inReps, cfg), cfg)
+    val inBands = bandTable(minhashSignaturesDistinct(inReps), cfg)
       .cut() // self-join sides + the cross join
-    val ixBands = bandTable(minhashSignaturesDistinct(ixReps, cfg), cfg)
+    val ixBands = bandTable(minhashSignaturesDistinct(ixReps), cfg)
     val inSh = inReps.select(col("doc_id"), shOf(col("text")).as("sh"))
     val ixSh = ixReps.select(col("doc_id"), shOf(col("text")).as("sh"))
     val vsIx = inBands.as("a").join(ixBands.as("b"),
@@ -1093,12 +1079,12 @@ object Dedup {
       .select(col("a.doc_id").as("g"), col("b.doc_id").as("x")).distinct()
       .join(inSh.select(col("doc_id").as("g"), col("sh").as("gsh")), "g")
       .join(ixSh.select(col("doc_id").as("x"), col("sh").as("xsh")), "x")
-      .filter(jacc(col("gsh"), col("xsh")) >= cfg.jaccardThreshold)
+      .filter(jacc(col("gsh"), col("xsh")) >= JACCARD)
       .select(col("g"))
     val vsIn = collidingPairs(inBands, Seq("band", "sig"))
       .join(inSh.select(col("doc_id").as("a_id"), col("sh").as("ash")), "a_id")
       .join(inSh.select(col("doc_id").as("b_id"), col("sh").as("bsh")), "b_id")
-      .filter(jacc(col("ash"), col("bsh")) >= cfg.jaccardThreshold)
+      .filter(jacc(col("ash"), col("bsh")) >= JACCARD)
       .select(col("b_id").as("g"))
     val dropped = vsIx.unionByName(vsIn).distinct()
       .withColumnRenamed("g", "doc_id")
@@ -1365,7 +1351,7 @@ object Dedup {
     val repText = withGid.filter(col("doc_id") === col("gid"))
       .select(col("doc_id"), col("text"))
       .cut() // ONE text materialization instead of three scan+window passes
-    val hasShingles = size(tokens(col("text"))) >= cfg.shingleSize
+    val hasShingles = size(tokens(col("text"))) >= SHINGLE
     val repSh = repText.filter(hasShingles)
     // clone groups are text-pure, so shingle-ability is group-closed:
     // the shingle-able member set is membersAll restricted to gids
@@ -1393,12 +1379,12 @@ object Dedup {
     // sf0.1 / 1.10× at sf10, still standing).
     val routes = Seq(
       "jaccard" -> ngramJaccardPairsCollapsed(membersSh, repSh,
-          jaccardThreshold, cfg, maxDocFreq = 100, mode = "auto")
+          jaccardThreshold, maxDocFreq = 100, mode = "auto")
         .select(col("a_id"), col("b_id")).cut(),
       "minhash" -> nearDupPairsCollapsed(membersSh, repSh, cfg)
         .select(col("a_id"), col("b_id")).cut(),
       "simhash" -> simhashPairsFromSigs(
-          simhashSignaturesCollapsed(membersAll, repText, cfg), cfg)
+          simhashSignaturesCollapsed(membersAll, repText), cfg)
         .select(col("a_id"), col("b_id")).cut())
     routeMatrixCells(routes)
   }
@@ -2627,7 +2613,7 @@ object Dedup {
     // share text, so rep tokens ARE member tokens.
     Q("q222_dup_pair_anatomy", (s, d) => {
       val cfg = LshConfig()
-      val hasShingles = size(tokens(col("text"))) >= cfg.shingleSize
+      val hasShingles = size(tokens(col("text"))) >= SHINGLE
       val shingled = t(s, d, "documents").filter(hasShingles)
         .withColumn("gid",
           min(col("doc_id")).over(Window.partitionBy(col("text"))))

@@ -16,11 +16,12 @@ import graft.miw.{LogFormat, MiwEngine}
   * the snapshot-after-each-file behavior (mr_job.h:147-177) falls out
   * of `foreachBatch`.
   *
-  * `parse` is reused verbatim from the batch engine: every per-row
-  * transform (tokenize, casts, bucketing, matches) is
-  * streaming-compatible by construction, and so is every per-field
-  * aggregate, union and union_count included: their value-count
-  * buffers are serialized into the state store like any other.
+  * Both entry points run the batch `MiwEngine.parse` and
+  * `MiwEngine.aggregate` unchanged: every per-row transform, every
+  * per-field aggregate (value-count buffers go into the state store
+  * like any other) and the ratio and finalize projections are
+  * streaming-compatible, so a stream emits the columns and rows
+  * `MiwEngine.runOnLines` gives over the lines fed so far.
   *
   * State bounding is the caller's choice. An unwindowed union or
   * union_count over an unbounded value domain (URLs, user agents)
@@ -30,23 +31,19 @@ import graft.miw.{LogFormat, MiwEngine}
 object MiwStreaming {
 
   /** Running keyed aggregation over a (possibly unbounded) line
-    * stream: `logs` first, then each non-ratio field's columns exactly
-    * as the batch `MiwEngine.aggregate` emits them (count adds
-    * `<name>_count`, variance is the reference's naive variance, union
-    * is the sorted set and union_count adds `<name>_count`). It drops
-    * ratio fields and output-time finalization. */
-  def aggregateStream(fmt: LogFormat, lines: DataFrame): DataFrame = {
-    val aggs = count(lit(1)).as("logs") +:
-      fmt.resolvedFields.filter(_.aggregation != "ratio").flatMap(MiwEngine.fieldAggs)
-    MiwEngine.splitValueCounts(MiwEngine.parse(fmt, lines)
-      .groupBy(col("__miw_key").as("id")).agg(aggs.head, aggs.tail: _*))
-  }
+    * stream: exactly the batch `MiwEngine.aggregate` of the parsed
+    * lines. `logs` (`count(1)`) is the state's first buffer slot. */
+  def aggregateStream(fmt: LogFormat, lines: DataFrame): DataFrame =
+    MiwEngine.aggregate(fmt, MiwEngine.parse(fmt, lines))
 
   /** Event-time tumbling-window variant with a watermark: the
     * streaming-native answer to the reference's key-side time
     * bucketing (date/time `processing`) — late data beyond the
     * watermark is dropped and state for closed windows is evicted,
-    * which is what bounds state at scale. */
+    * which is what bounds state at scale. A row is `window_start`,
+    * then the batch columns of that window's lines. A line whose
+    * `tsField` does not parse as a timestamp is dropped before the
+    * watermark. */
   def windowedAggregateStream(
       fmt: LogFormat,
       lines: DataFrame,
@@ -54,13 +51,13 @@ object MiwStreaming {
       window: String,
       watermark: String): DataFrame = {
     val parsed = MiwEngine.parse(fmt, lines)
-      .withColumn("__ts", to_timestamp(col(tsField)))
+      .withColumn("__ts", try_to_timestamp(col(tsField)))
+      .filter(col("__ts").isNotNull)
       .withWatermark("__ts", watermark)
-    parsed
-      .groupBy(org.apache.spark.sql.functions.window(col("__ts"), window).as("win"),
-        col("__miw_key").as("id"))
-      .agg(count(lit(1)).as("logs"))
-      .select(col("win.start").as("window_start"), col("id"), col("logs"))
+    val out = MiwEngine.aggregate(fmt, parsed,
+      groupCols = Seq(org.apache.spark.sql.functions.window(col("__ts"), window).as("__win")))
+    out.select(col("__win.start").as("window_start") +:
+      out.columns.filter(_ != "__win").map(n => col(s"`$n`")).toSeq: _*)
   }
 
   /** File-source convenience: stream text files appearing under `dir`

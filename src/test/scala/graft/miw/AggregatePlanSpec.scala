@@ -1,12 +1,16 @@
 package graft.miw
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.functions.ValueCounts
+import graft.streaming.MiwStreaming
 
 /** Plan guard for the MIW aggregate: string union and union_count
   * fields merge in the value-count kernel inside the one partial/final
@@ -45,6 +49,19 @@ class AggregatePlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     for (banned <- Seq("unioncount", "collect_set", "map_keys", "element_at", "transform",
         "lambdafunction"))
       assert(!text.contains(banned), s"$banned in\n$plan")
+  }
+
+  test("the streaming aggregate plans the batch aggregate expressions on the bench proxy format") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val fmt = LogFormat.parseFile("perfbench/formats/proxy.json")
+    def aggExprs(df: DataFrame) = df.queryExecution.analyzed.collect {
+      case a: Aggregate => a.aggregateExpressions.map(_.toString.replaceAll("#\\d+", ""))
+    }
+    val streamed = aggExprs(MiwStreaming.aggregateStream(fmt, MemoryStream[String].toDF()))
+    val batch = aggExprs(MiwEngine.aggregate(fmt, MiwEngine.parse(fmt, Seq("x").toDF("value"))))
+    assert(streamed.nonEmpty)
+    assert(streamed == batch)
   }
 
   test("a numeric union still concatenates through collect_list") {

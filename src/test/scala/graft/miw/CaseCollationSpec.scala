@@ -43,4 +43,15 @@ class CaseCollationSpec extends AnyFunSuite {
     assert(a.caseInsensitiveKeys)
     assert(!MiwCli.parseArgs(Array("-fnames", "x")).caseInsensitiveKeys)
   }
+
+  test("parseArgs names the flag of a missing or non-integer value") {
+    for ((argv, msg) <- Seq(
+        Array("-format_name", "y", "-fnames") -> "-fnames needs a value",
+        Array("-fnames", "x", "--ndisp") -> "-ndisp needs a value",
+        Array("-ndisp", "x") -> "-ndisp needs an integer: x",
+        Array("-solr_batch_size=1e3") -> "-solr_batch_size needs an integer: 1e3")) {
+      val e = intercept[IllegalArgumentException](MiwCli.parseArgs(argv))
+      assert(e.getMessage.contains(msg), argv.mkString(" "))
+    }
+  }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.miw.MiwGoldenFixtures._
 
 /** The reference's end-to-end golden tests (tests/ut-mr-parsing.cc),
   * re-run through the Spark engine on the same fixture bytes and
@@ -18,17 +19,9 @@ class MiwGoldenSpec extends AnyFunSuite {
                   opts: MiwEngine.Options = MiwEngine.Options()) =
     MiwEngine.runOnLines(spark, LogFormat.parse(formatJson), lines, opts)
 
-  private def fmtJson(fields: String, extra: String = ""): String =
-    s"""{"format_name":"t","delims":",","quotechar":"\\"",$extra"fields":[$fields]}"""
-
   // ---- fixture 1: sum (ut-mr-parsing.cc:374-404) ----
   test("sum: v1=16, v2=17, logs=6") {
-    val fmt = fmtJson(
-      """{"name":"id","pos":0,"type":"int","key":true},
-         {"name":"v1","pos":1,"type":"int","aggregated":true,"aggregation":"sum"},
-         {"name":"v2","pos":2,"type":"float","aggregated":true,"aggregation":"sum"}""")
-    val data = Seq("1,3,3.5", "1,1,1.0", "1,5,5.0", "1,3,3.5", "1,2,2.0", "1,2,2.0")
-    val rows = run(fmt, data).collect()
+    val rows = run(sum.format, sum.lines).collect()
     assert(rows.length == 1)
     val r = rows.head
     // a declared field named "id" overwrites the key in the output
@@ -41,24 +34,14 @@ class MiwGoldenSpec extends AnyFunSuite {
 
   // ---- fixture 2: variance (ut-mr-parsing.cc:124-161) ----
   test("variance: var=1.8666666666666671 (naive formula, n-1)") {
-    val fmt = fmtJson(
-      """{"name":"id","pos":0,"type":"int","key":true},
-         {"name":"var","pos":1,"type":"float","aggregated":true,"aggregation":"variance"}""")
-    val data = Seq("1,3", "1,1", "1,5", "1,3", "1,2", "1,2")
-    val r = run(fmt, data).collect().head
+    val r = run(variance.format, variance.lines).collect().head
     assert(r.getAs[Double]("var") == 1.8666666666666671)
   }
 
   // ---- fixture 3: variance-mean-sum, one token → 3 fields
   //      (ut-mr-parsing.cc:163-194) ----
   test("variance-mean-sum over one column") {
-    val fmt = fmtJson(
-      """{"name":"id","pos":0,"type":"int","key":true},
-         {"name":"variance","pos":1,"type":"int","aggregated":true,"aggregation":"variance"},
-         {"name":"mean","pos":1,"type":"int","aggregated":true,"aggregation":"mean"},
-         {"name":"sum","pos":1,"type":"int","aggregated":true,"aggregation":"sum"}""")
-    val data = Seq("1,3", "1,1", "1,5", "1,3", "1,2", "1,2")
-    val r = run(fmt, data).collect().head
+    val r = run(varianceMeanSum.format, varianceMeanSum.lines).collect().head
     assert(r.getAs[Double]("variance") == 1.8666666666666671)
     assert(r.getAs[Double]("mean") == 2.6666666666666665)
     assert(r.getAs[Long]("sum") == 16L)
@@ -66,13 +49,7 @@ class MiwGoldenSpec extends AnyFunSuite {
 
   // ---- fixture 4: filter_contain (ut-mr-parsing.cc:196-226) ----
   test("filter_contain: denied_count=2, ok_count=3") {
-    val fmt = fmtJson(
-      """{"name":"id","pos":0,"type":"int","key":true},
-         {"name":"str","pos":1,"type":"string"},
-         {"name":"denied_count","pos":1,"type":"int","filter":"denied","filter_type":"contain"},
-         {"name":"ok_count","pos":1,"type":"int","filter":"ok","filter_type":"contain"}""")
-    val data = Seq("1,ok", "1,denied", "1,ok", "1,denied", "1,ok")
-    val r = run(fmt, data).collect().head
+    val r = run(filterContain.format, filterContain.lines).collect().head
     assert(r.getAs[Long]("denied_count") == 2L)
     assert(r.getAs[Long]("ok_count") == 3L)
     assert(r.getAs[Long]("logs") == 5L)
@@ -80,71 +57,35 @@ class MiwGoldenSpec extends AnyFunSuite {
 
   // ---- fixture 5: substring match keeps (ut-mr-parsing.cc:228-259) ----
   test("match substring 'and': KO row dropped, OOKK rows kept") {
-    val fmt = fmtJson(
-      """{"name":"id","pos":0,"type":"string","key":true},
-         {"name":"val","pos":1,"type":"string"},
-         {"name":"testmatch","pos":1,"type":"string",
-          "match":{"match_str":"OK","logic":"and"}}""")
-    val data = Seq("1,OOKK", "2,OOKK", "3,KO")
-    val rows = run(fmt, data).collect()
+    val rows = run(matchSubstring.format, matchSubstring.lines).collect()
     assert(rows.length == 2)
     assert(rows.forall(_.getAs[String]("val") == "OOKK"))
   }
 
   // ---- fixture 6: exact match (ut-mr-parsing.cc:300-336) ----
   test("match exact: only literal OK rows survive") {
-    val fmt = fmtJson(
-      """{"name":"id","pos":0,"type":"string","key":true},
-         {"name":"val","pos":1,"type":"string"},
-         {"name":"testmatch","pos":1,"type":"string",
-          "match":{"match_str":"OK","logic":"and","exact":true}}""")
-    val data = Seq("1,OK", "2,OK", "3,KO", "4,KO2")
-    val rows = run(fmt, data).collect()
+    val rows = run(matchExact.format, matchExact.lines).collect()
     assert(rows.length == 2)
     assert(rows.forall(_.getAs[String]("val") == "OK"))
   }
 
   // ---- fixture 7: exact negative match (ut-mr-parsing.cc:338-372) ----
   test("match exact negative: only literal KO rows killed") {
-    val fmt = fmtJson(
-      """{"name":"id","pos":0,"type":"string","key":true},
-         {"name":"val","pos":1,"type":"string"},
-         {"name":"testmatch","pos":1,"type":"string",
-          "match":{"match_str":"KO","logic":"and","negative":true,"exact":true}}""")
-    val data = Seq("1,OK", "2,OK", "3,KO", "4,KO2")
-    val rows = run(fmt, data).collect()
+    val rows =
+      run(matchExactNegative.format, matchExactNegative.lines).collect()
     assert(rows.map(_.getAs[String]("val")).sorted.toSeq == Seq("KO2", "OK", "OK"))
   }
 
   // ---- fixture 8: match_file negative (FIXTURES.md §8) ----
   test("match_file negative: dictionary rows dropped (anti-join semantics)") {
-    val dict = java.nio.file.Files.createTempFile("match_file", ".txt")
-    java.nio.file.Files.writeString(dict, "KO\nNA\n")
-    val fmt = fmtJson(
-      s"""{"name":"id","pos":0,"type":"string","key":true},
-          {"name":"val","pos":1,"type":"string"},
-          {"name":"testmatch","pos":1,"type":"string",
-           "match":{"match_file":"${dict.toString}","logic":"and","negative":true}}""")
-    val data = Seq("1,OK", "2,KO", "3,NA", "4,OK")
-    val rows = run(fmt, data).collect()
+    val rows = run(matchFileNegative.format, matchFileNegative.lines).collect()
     assert(rows.map(_.getAs[String]("id")).sorted.toSeq == Seq("1", "4"))
   }
 
   // ---- fixture 9: ratio incl. float32 artifacts and /logs
   //      (ut-mr-parsing.cc:406-435) ----
   test("ratio: iratio/fratio = 16/28 in float32, tratio = 16/6 in float32") {
-    val fmt = fmtJson(
-      """{"name":"id","pos":0,"type":"int","key":true},
-         {"name":"i1","pos":1,"type":"int","aggregated":true,"aggregation":"sum"},
-         {"name":"i2","pos":2,"type":"int","aggregated":true,"aggregation":"sum"},
-         {"name":"f1","pos":3,"type":"float","aggregated":true,"aggregation":"sum"},
-         {"name":"f2","pos":4,"type":"float","aggregated":true,"aggregation":"sum"},
-         {"name":"iratio","numerator":"i1","denominator":"i2","type":"float","aggregated":true,"aggregation":"ratio"},
-         {"name":"fratio","numerator":"f1","denominator":"f2","type":"float","aggregated":true,"aggregation":"ratio"},
-         {"name":"tratio","numerator":"f1","denominator":"logs","type":"float","aggregated":true,"aggregation":"ratio"}""")
-    val data = Seq("1,3,5,3,5", "1,1,3,1,3", "1,5,7,5,7",
-                   "1,3,2,3,2", "1,2,9,2,9", "1,2,2,2,2")
-    val r = run(fmt, data).collect().head
+    val r = run(ratio.format, ratio.lines).collect().head
     assert(r.getAs[Double]("iratio") == 0.57142859697341919)
     assert(r.getAs[Double]("fratio") == 0.57142859697341919)
     assert(r.getAs[Double]("tratio") == 2.6666667461395264)
@@ -162,33 +103,21 @@ class MiwGoldenSpec extends AnyFunSuite {
 
   // ---- date bucketing: unpadded month/day (SURVEY §7.4 hazard 7) ----
   test("date bucket day is unpadded, minute bucket uses offset") {
-    val fmt = fmtJson(
-      """{"name":"d","pos":0,"type":"date","key":true,"processing":"day","date_format":"%Y-%m-%d"},
-         {"name":"v","pos":1,"type":"int","aggregated":true,"aggregation":"sum"}""")
-    val data = Seq("2012-03-05,1", "2012-03-05,2", "2012-11-30,5")
-    val rows = run(fmt, data).collect().sortBy(_.getAs[String]("id"))
+    val rows = run(dateBucket.format, dateBucket.lines).collect().sortBy(_.getAs[String]("id"))
     assert(rows.map(_.getAs[String]("id")).toSeq == Seq("2012-11-30", "2012-3-5"))
     assert(rows.map(_.getAs[Long]("v")).toSeq == Seq(5L, 3L))
   }
 
   test("time-of-day minute bucket with offset 10 (evtx.json style)") {
-    val fmt = fmtJson(
-      """{"name":"t","pos":0,"type":"time","key":true,"processing":"minute","processing_offset":10},
-         {"name":"v","pos":1,"type":"int","aggregated":true,"aggregation":"sum"}""")
-    val data = Seq("14:39:02,1", "14:33:59,2", "14:41:00,4")
-    val rows = run(fmt, data).collect().sortBy(_.getAs[String]("id"))
+    val rows =
+      run(minuteBucket.format, minuteBucket.lines).collect().sortBy(_.getAs[String]("id"))
     assert(rows.map(r => (r.getAs[String]("id"), r.getAs[Long]("v"))).toSeq ==
       Seq(("14:30", 3L), ("14:40", 4L)))
   }
 
   // ---- union / union_count ----
   test("union collects sorted distinct strings; union_count pairs counts") {
-    val fmt = fmtJson(
-      """{"name":"k","pos":0,"type":"string","key":true},
-         {"name":"u","pos":1,"type":"string","aggregated":true,"aggregation":"union"},
-         {"name":"uc","pos":1,"type":"string","aggregated":true,"aggregation":"union_count"}""")
-    val data = Seq("a,x", "a,y", "a,x", "a,z", "b,q")
-    val rows = run(fmt, data).collect().sortBy(_.getAs[String]("id"))
+    val rows = run(union.format, union.lines).collect().sortBy(_.getAs[String]("id"))
     val a = rows(0)
     assert(a.getAs[scala.collection.Seq[String]]("u").toSeq == Seq("x", "y", "z"))
     assert(a.getAs[scala.collection.Seq[String]]("uc").toSeq == Seq("x", "y", "z"))
@@ -197,13 +126,7 @@ class MiwGoldenSpec extends AnyFunSuite {
 
   // ---- url normalization ----
   test("url normalize rebuilds via url_format template") {
-    val fmt = """{"format_name":"t","delims":",","fields":[
-         {"name":"u","pos":0,"type":"url","key":true},
-         {"name":"v","pos":1,"type":"int","aggregated":true,"aggregation":"sum"}]}"""
-    val data = Seq("http://example.com:8080/a/b?q=1,1",
-                   "http://example.com:8080/c,2",
-                   "noscheme,7")
-    val rows = run(fmt, data).collect()
+    val rows = run(url.format, url.lines).collect()
     val byId = rows.map(r => r.getAs[String]("id") -> r.getAs[Long]("v")).toMap
     assert(byId == Map("http://example.com:8080" -> 3L, "noscheme" -> 7L))
   }
@@ -229,22 +152,13 @@ class MiwGoldenSpec extends AnyFunSuite {
 
   // ---- std_date_dt synthesis ----
   test("std_date_dt joins date and time buckets") {
-    val fmt = fmtJson(
-      """{"name":"d","pos":0,"type":"date","key":true,"processing":"day","date_format":"%Y-%m-%d"},
-         {"name":"t","pos":1,"type":"time","key":true,"processing":"hour"},
-         {"name":"v","pos":2,"type":"int","aggregated":true,"aggregation":"sum"}""")
-    val data = Seq("2014-01-07,09:15:00,1")
-    val r = run(fmt, data).collect().head
+    val r = run(stdDateDt.format, stdDateDt.lines).collect().head
     assert(r.getAs[String]("std_date_dt") == "2014-1-7T09Z")
   }
 
   // ---- evtx preprocessing through the full engine pipeline ----
   test("evtxcsv preprocessing emits the parsed kv map beside the raw field") {
-    val fmtSemi = """{"format_name":"t","delims":";","fields":[
-         {"name":"k","pos":0,"type":"string","key":true},
-         {"name":"blob","pos":1,"type":"string","preprocessing":"evtxcsv"}]}"""
-    val data = Seq("a;x -> k1 = v1 k2 = v2", "a;x -> k1 = v1 k2 = v2")
-    val r = MiwEngine.runOnLines(spark, LogFormat.parse(fmtSemi), data).collect().head
+    val r = run(evtxcsv.format, evtxcsv.lines).collect().head
     val kv = r.getAs[Map[String, String]]("blob_kv")
     assert(kv == Map("k1" -> "v1", "k2" -> "v2"))
     assert(r.getAs[Long]("logs") == 2L)

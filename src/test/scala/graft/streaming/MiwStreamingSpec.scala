@@ -1,10 +1,12 @@
 package graft.streaming
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, date_format}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
-import graft.miw.LogFormat
+import graft.miw.{LogFormat, MiwEngine, MiwGoldenFixtures, Output}
 
 /** Incremental (streaming) aggregation = the reference's
   * -merge_results loop (miw/job.cc:197-226): state carries across
@@ -16,6 +18,28 @@ class MiwStreamingSpec extends AnyFunSuite {
     """{"format_name":"t","delims":",","fields":[
         {"name":"k","pos":0,"type":"string","key":true},
         {"name":"v","pos":1,"type":"int","aggregated":true,"aggregation":"sum"}]}""")
+
+  /** `streamed` has the columns, in order, and the rows of `batch`. */
+  private def assertSameAsBatch(streamed: DataFrame, batch: DataFrame, clue: String): Unit = {
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    assert(streamed.columns.toSeq == batch.columns.toSeq, clue)
+    assert(rows(streamed) == rows(batch), clue)
+  }
+
+  /** Feeds each of `batches` as one micro-batch into `build` over a
+    * MemoryStream (complete mode, memory sink `name`) and returns the
+    * sink's table after the last one. */
+  private def runStream(name: String, batches: Seq[Seq[String]])
+                       (build: DataFrame => DataFrame): DataFrame = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val in = MemoryStream[String]
+    val q = build(in.toDF()).writeStream.format("memory").queryName(name)
+      .outputMode("complete").start()
+    try batches.foreach { b => in.addData(b); q.processAllAvailable() }
+    finally q.stop()
+    spark.table(name)
+  }
 
   test("keyed aggregation state merges across micro-batches") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -71,8 +95,9 @@ class MiwStreamingSpec extends AnyFunSuite {
       assert(snaps.length >= 2, snaps.mkString(","))
       val last = scala.io.Source.fromFile(
         new java.io.File(snapDir, snaps.last)).getLines().toSeq
-      assert(last.head == "id,k,logs,v")
-      assert(last.tail.contains("\"a\",\"a\",3,7"))
+      val batch = MiwEngine.runOnLines(spark, sumFmt, Seq("a,1", "a,2", "a,4"))
+      assert(last.head == Output.csvHeader(batch))
+      assert(last.tail.sorted == Output.csvLines(batch).collect().toSeq.sorted)
     } finally q.stop()
   }
 
@@ -114,12 +139,7 @@ class MiwStreamingSpec extends AnyFunSuite {
     try {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
       val streamed = spark.table("miw_cv")
-      // logs stays slot 0: consumers read the running count there
-      assert(streamed.columns.toSeq == Seq("id", "logs", "k", "c", "c_count", "v"))
-      val batch = graft.miw.MiwEngine.runOnLines(spark, fmt, batches.flatten)
-        .select(streamed.columns.map(org.apache.spark.sql.functions.col): _*)
-      val rows = (df: org.apache.spark.sql.DataFrame) => df.collect().map(_.toSeq).toSet
-      assert(rows(streamed) == rows(batch))
+      assertSameAsBatch(streamed, MiwEngine.runOnLines(spark, fmt, batches.flatten), "")
       assert(streamed.filter("id = 'a'").select("c", "c_count", "v").head().toSeq ==
         Seq("w", 3L, 9.0))
     } finally q.stop()
@@ -144,12 +164,7 @@ class MiwStreamingSpec extends AnyFunSuite {
     try {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
       val streamed = spark.table("miw_union")
-      assert(streamed.columns.toSeq ==
-        Seq("id", "logs", "k", "u", "uc", "uc_count", "n", "nc", "nc_count"))
-      val batch = graft.miw.MiwEngine.runOnLines(spark, fmt, batches.flatten)
-        .select(streamed.columns.map(org.apache.spark.sql.functions.col): _*)
-      val rows = (df: org.apache.spark.sql.DataFrame) => df.collect().map(_.toSeq).toSet
-      assert(rows(streamed) == rows(batch))
+      assertSameAsBatch(streamed, MiwEngine.runOnLines(spark, fmt, batches.flatten), "")
       assert(streamed.filter("id = 'a'").select("u", "uc", "uc_count", "n", "nc", "nc_count")
         .head().toSeq == Seq(Seq("w", "x", "y"), Seq("w", "x", "y"), Seq(1L, 2L, 2L),
           Seq(1L, 1L, 4L, 4L, 7L), Seq("1", "4", "7"), Seq(2L, 2L, 1L)))
@@ -181,6 +196,71 @@ class MiwStreamingSpec extends AnyFunSuite {
         ("2024-01-01 10:10", "a") -> 1L,
         ("2024-01-01 10:00", "b") -> 1L))
     } finally q.stop()
+  }
+
+  test("every inline golden fixture streams exactly what the batch engine emits") {
+    val unsplit = scala.collection.mutable.ArrayBuffer.empty[String]
+    for (f <- MiwGoldenFixtures.all) {
+      val fmt = LogFormat.parse(f.format)
+      // the first line alone, then the rest: the first line's key
+      // straddles the two micro-batches wherever it recurs
+      val batches = Seq(f.lines.take(1), f.lines.drop(1))
+      val ids = (ls: Seq[String]) =>
+        MiwEngine.runOnLines(spark, fmt, ls).select("id").collect().map(_.get(0)).toSet
+      if ((ids(batches(0)) intersect ids(batches(1))).isEmpty) unsplit += f.name
+      val name = "miw_golden_" + f.name.replaceAll("\\W", "_")
+      assertSameAsBatch(runStream(name, batches)(MiwStreaming.aggregateStream(fmt, _)),
+        MiwEngine.runOnLines(spark, fmt, f.lines), f.name)
+    }
+    // only fixtures whose kept lines all have distinct keys (or that
+    // have one line) cannot split a key across batches
+    assert(unsplit.toSeq == Seq("match substring", "match exact", "match exact negative",
+      "match_file negative", "std_date_dt"))
+  }
+
+  /** Ten-minute windows over `ts`, keyed by `k`, with a count, a mean,
+    * a union_count and a ratio over the mean. */
+  private val windowFmt = LogFormat.parse(
+    """{"format_name":"w","delims":",","fields":[
+        {"name":"ts","pos":0,"type":"string"},
+        {"name":"k","pos":1,"type":"string","key":true},
+        {"name":"c","pos":2,"type":"string","aggregated":true,"aggregation":"count"},
+        {"name":"m","pos":3,"type":"int","aggregated":true,"aggregation":"mean"},
+        {"name":"u","pos":2,"type":"string","aggregated":true,"aggregation":"union_count"},
+        {"name":"r","numerator":"m","denominator":"logs","type":"float","aggregated":true,"aggregation":"ratio"}]}""")
+
+  /** Streams `batches` through the windowed aggregate and asserts that
+    * each window's rows are `window_start` plus the batch engine's
+    * output over that window's lines (the lines whose timestamp
+    * starts with the window's `yyyy-MM-dd HH:m`). */
+  private def assertWindowsAsBatch(name: String, batches: Seq[Seq[String]],
+                                   windows: Seq[String]): Unit = {
+    val out = runStream(name, batches)(MiwStreaming.windowedAggregateStream(windowFmt, _,
+      tsField = "ts", window = "10 minutes", watermark = "1 hour"))
+    val start = date_format(col("window_start"), "yyyy-MM-dd HH:mm")
+    assert(out.select(start).distinct().collect().map(_.getString(0)).sorted.toSeq ==
+      windows.map(_ + "0"))
+    for (w <- windows) {
+      val batch = MiwEngine.runOnLines(spark, windowFmt, batches.flatten.filter(_.startsWith(w)))
+      assert(out.columns.toSeq == "window_start" +: batch.columns.toSeq)
+      assertSameAsBatch(out.filter(start === w + "0").drop("window_start"), batch, w)
+    }
+  }
+
+  test("each window streams the batch engine's output over that window's lines") {
+    assertWindowsAsBatch("miw_win_batch", Seq(
+      Seq("2024-01-01 10:03:00,a,x,1", "2024-01-01 10:07:00,a,y,4",
+        "2024-01-01 10:13:00,a,x,2", "2024-01-01 10:04:00,b,x,10"),
+      Seq("2024-01-01 10:05:00,a,x,7", "2024-01-01 10:15:00,b,z,3",
+        "2024-01-01 10:16:00,a,x,5")),
+      Seq("2024-01-01 10:0", "2024-01-01 10:1"))
+  }
+
+  test("a line whose timestamp does not parse is dropped, the windows of the others stand") {
+    assertWindowsAsBatch("miw_win_badts", Seq(
+      Seq("2024-01-01 10:03:00,a,x,1", "garbage,a,x,100", "2024-01-01 10:13:00,b,y,2"),
+      Seq("2024-01-01 10:05:00,a,y,4")),
+      Seq("2024-01-01 10:0", "2024-01-01 10:1"))
   }
 
   test("streaming HTTP push posts each micro-batch's refreshed rows") {
