@@ -24,6 +24,13 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.map(q => q.name -> q.fn).toMap
 
+  /** Does one entry of a query list (`SPARK_GRAFT_ONLY`,
+    * `SPARK_GRAFT_SKIP`, the Plans tool's list) select query `name`?
+    * An entry is a full name or a name's id prefix up to its `_`:
+    * `q23` and `q23_` select `q23_minhash_sig`, never `q230_…`. */
+  def selects(entry: String, name: String): Boolean =
+    name == entry || name.startsWith(if (entry.endsWith("_")) entry else entry + "_")
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -49,15 +49,25 @@ object ExactCols {
 
   /** JVM-side mirror of [[hmod]] (md5 first-15-hex → int64, % P) for
     * per-row imperative paths (typed streaming maps) that must agree
-    * bit-for-bit with the columnar expression. The first 15 hex chars
-    * of the digest are the top 60 bits of the first 8 bytes read
-    * big-endian, so the value is computed directly from the bytes —
-    * no hex formatting/parsing round trip (was ~1 µs/call, dominating
-    * the per-token codec paths); ExactColsSpec pins JVM ≡ column. */
-  def hmodJvm(s: String): Long = {
+    * bit-for-bit with the columnar expression.
+    * ExactColsSpec pins JVM ≡ column. */
+  def hmodJvm(s: String): Long = hmodBytes(s.getBytes("UTF-8"))
+
+  /** [[hmodJvm]] over raw UTF-8 bytes — the one JVM md5 fold; the
+    * native text kernels hash `UTF8String` bytes through it. */
+  def hmodBytes(bytes: Array[Byte]): Long = {
     val md = md5Local.get()
     md.reset()
-    val d = md.digest(s.getBytes("UTF-8"))
+    foldDigest(md.digest(bytes))
+  }
+
+  /** md5 digest → [[hmod]] value. The first 15 hex chars of the
+    * digest are the top 60 bits of the first 8 bytes read big-endian,
+    * so the value is computed directly from the bytes — no hex
+    * formatting/parsing round trip (was ~1 µs/call, dominating the
+    * per-token codec paths). Kernels that stream several tokens into
+    * one digest fold it here. */
+  def foldDigest(d: Array[Byte]): Long = {
     val be =
       ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
         ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -22,12 +22,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * with UTF8String.concatWs (no boxing, no per-gram closures);
   * distinctness uses a single hash set over UTF8String keys.
   *
-  * CodegenFallback: the expression is evaluated once per row (not per
-  * element), so the codegen boundary costs one row materialization —
-  * noise next to the per-gram savings.
+  * doGenCode calls `compute`, so its operator stays in whole-stage
+  * codegen (a CodegenFallback expression would take the whole
+  * operator out — the per-row signature kernel over these grams too).
   */
 case class WordNGrams(child: Expression, n: Int, distinct: Boolean)
-    extends UnaryExpression with CodegenFallback with Serializable {
+    extends UnaryExpression with Serializable {
 
   require(n >= 1, "n-gram size must be >= 1")
 
@@ -42,8 +42,16 @@ case class WordNGrams(child: Expression, n: Int, distinct: Boolean)
       s"$prettyName requires array<string>, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, toks => {
+      val ref = ctx.addReferenceObj("wordNGrams", this, classOf[WordNGrams].getName)
+      s"${ev.value} = $ref.compute($toks);"
+    })
+
+  /** Exposed for generated code. */
+  def compute(toks: ArrayData): ArrayData = {
     val sz = toks.numElements()
     val m = sz - n + 1
     if (m <= 0) return new GenericArrayData(Array.empty[Any])

@@ -189,21 +189,6 @@ case class AlnumCount(child: Expression)
   override def prettyName: String = "alnum_count"
 }
 
-/** The library's shared document hash (ExactCols.hmod) on the JVM
-  * side: first 15 hex chars of md5 = first 8 digest bytes as a
-  * big-endian unsigned 64 shifted right a nibble (60 bits), folded
-  * mod P = 1e9+7 — reproducible in any engine with md5. */
-private[functions] object Md5Fold {
-  val P = 1000000007L
-  def fold(md: java.security.MessageDigest, s: UTF8String): Long = {
-    val digest = md.digest(s.getBytes)
-    var u = 0L
-    var b = 0
-    while (b < 8) { u = (u << 8) | (digest(b) & 0xffL); b += 1 }
-    (u >>> 4) % P
-  }
-}
-
 /** Whole winnowing selection (Schleimer et al.) as ONE per-row kernel
   * over the shingle array: md5-fold each shingle to the shared 60-bit
   * hash (identical to ExactCols.hmod — first 15 hex chars of md5 =
@@ -224,7 +209,6 @@ case class WinnowFingerprint(child: Expression, w: Int)
   require(w > 0)
 
   private val M = 1L << 20
-  private val P = 1000000007L
 
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = StructType(Seq(
@@ -241,11 +225,10 @@ case class WinnowFingerprint(child: Expression, w: Int)
   def compute(xs: ArrayData): InternalRow = {
     val n = xs.numElements()
     if (n == 0) return new GenericInternalRow(Array[Any](0L, 0L))
-    val md = java.security.MessageDigest.getInstance("MD5")
     val h = new Array[Long](n)
     var i = 0
     while (i < n) {
-      h(i) = Md5Fold.fold(md, xs.getUTF8String(i))
+      h(i) = ExactCols.hmodBytes(xs.getUTF8String(i).getBytes)
       i += 1
     }
     val selected = new java.util.HashSet[java.lang.Long]()
@@ -266,7 +249,7 @@ case class WinnowFingerprint(child: Expression, w: Int)
     var sum = 0L
     val it = selected.iterator()
     while (it.hasNext) sum += it.next()
-    new GenericInternalRow(Array[Any](selected.size.toLong, sum % P))
+    new GenericInternalRow(Array[Any](selected.size.toLong, sum % ExactCols.P))
   }
 
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
@@ -280,6 +263,84 @@ case class WinnowFingerprint(child: Expression, w: Int)
   override protected def withNewChildInternal(newChild: Expression): WinnowFingerprint =
     copy(child = newChild)
   override def prettyName: String = "winnow_fingerprint"
+}
+
+/** A document's MinHash AND SimHash signature as ONE per-row kernel
+  * over its shingle OCCURRENCES (word n-grams, `distinct = false`):
+  * each occurrence is md5-folded once (ExactCols.hmodBytes, the
+  * shared hmod), and one loop keeps
+  *  - `nh` minima mh_j = min ((2j+1)·h + j²+7) mod P (the MinHash
+  *    family; min is idempotent, so occurrences give the same minima
+  *    as the distinct shingle set), and
+  *  - `simBits` bit counters c_k = #{h : bit k of h set}; simhash bit
+  *    k is set iff 2·c_k > #occurrences (majority with multiplicity).
+  * An empty array gives mh_j = P (the no-shingle sentinel) and
+  * simhash 0. Null input → null; null elements are skipped.
+  *
+  * Every shingle of a document lives in its row, so the signature
+  * needs no explode → groupBy(doc) shuffle: the operator stays a
+  * scan-stage projection inside whole-stage codegen (doGenCode calls
+  * compute, as WinnowFingerprint does). */
+case class ShingleSignature(child: Expression, nh: Int, simBits: Int)
+    extends UnaryExpression with Serializable {
+  // h < P < 2³⁰, so bits above 29 are always clear
+  require(nh > 0 && simBits > 0 && simBits <= 30, "signature width out of range")
+
+  override def nullIntolerant: Boolean = true
+  override def dataType: DataType = StructType(
+    (0 until nh).map(j => StructField(s"mh$j", LongType, nullable = false)) :+
+      StructField("simhash", LongType, nullable = false))
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case dt => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires array<string>, got ${dt.simpleString}")
+  }
+
+  /** Exposed for generated code. */
+  def compute(xs: ArrayData): InternalRow = {
+    val P = ExactCols.P
+    val n = xs.numElements()
+    val mh = Array.fill(nh)(P)
+    val bits = new Array[Long](simBits)
+    var occ = 0L
+    var i = 0
+    while (i < n) {
+      if (!xs.isNullAt(i)) {
+        val h = ExactCols.hmodBytes(xs.getUTF8String(i).getBytes)
+        var j = 0
+        while (j < nh) {
+          val v = ((2L * j + 1) * h + (j.toLong * j + 7)) % P
+          if (v < mh(j)) mh(j) = v
+          j += 1
+        }
+        var k = 0
+        while (k < simBits) { bits(k) += (h >>> k) & 1L; k += 1 }
+        occ += 1
+      }
+      i += 1
+    }
+    var sim = 0L
+    var k = 0
+    while (k < simBits) { if (2 * bits(k) > occ) sim |= 1L << k; k += 1 }
+    val out = new Array[Any](nh + 1)
+    var j = 0
+    while (j < nh) { out(j) = mh(j); j += 1 }
+    out(nh) = sim
+    new GenericInternalRow(out)
+  }
+
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, xs => {
+      val ref = ctx.addReferenceObj("shingleSig", this, classOf[ShingleSignature].getName)
+      s"${ev.value} = $ref.compute($xs);"
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): ShingleSignature =
+    copy(child = newChild)
+  override def prettyName: String = "shingle_signature"
 }
 
 /** Count of array elements containing at least one ASCII letter —
@@ -359,14 +420,13 @@ case class PositionalFingerprint(child: Expression)
   def compute(xs: ArrayData): Long = {
     val n = xs.numElements()
     if (n == 0) return 0L
-    val md = java.security.MessageDigest.getInstance("MD5")
     var acc = 0L
     var i = 0
     while (i < n) {
-      acc += Md5Fold.fold(md, xs.getUTF8String(i)) * ((i % 16) + 1)
+      acc += ExactCols.hmodBytes(xs.getUTF8String(i).getBytes) * ((i % 16) + 1)
       i += 1
     }
-    acc % Md5Fold.P
+    acc % ExactCols.P
   }
 
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
@@ -496,11 +556,7 @@ case class BlockHash(child: Expression, b: Int)
           }
           j += 1
         }
-        val digest = md.digest() // resets the digest for the next block
-        var u = 0L
-        var i = 0
-        while (i < 8) { u = (u << 8) | (digest(i) & 0xffL); i += 1 }
-        out(blk) = (u >>> 4) % Md5Fold.P
+        out(blk) = ExactCols.foldDigest(md.digest()) // resets md for the next block
         blk += 1
       }
     }
@@ -549,7 +605,6 @@ case class CdcChunkHash(child: Expression, mod: Int)
     val n = xs.numElements()
     val out = new scala.collection.mutable.ArrayBuffer[Long](n / mod + 1)
     if (n > 0) {
-      val bmd = java.security.MessageDigest.getInstance("MD5")
       val cmd = java.security.MessageDigest.getInstance("MD5")
       var first = true
       var i = 0
@@ -559,12 +614,8 @@ case class CdcChunkHash(child: Expression, mod: Int)
         if (!first) cmd.update(' '.toByte)
         cmd.update(tok.getBytes)
         first = false
-        if (Md5Fold.fold(bmd, tok) % mod == 0 || i == n - 1) {
-          val digest = cmd.digest() // resets the accumulator for the next chunk
-          var u = 0L
-          var b = 0
-          while (b < 8) { u = (u << 8) | (digest(b) & 0xffL); b += 1 }
-          out += (u >>> 4) % Md5Fold.P
+        if (ExactCols.hmodBytes(tok.getBytes) % mod == 0 || i == n - 1) {
+          out += ExactCols.foldDigest(cmd.digest()) // resets the accumulator for the next chunk
           first = true
         }
         i += 1
@@ -668,6 +719,10 @@ object TextExprs {
 
   def winnowFingerprint(shingles: Column, w: Int): Column =
     Shim.column(WinnowFingerprint(Shim.expression(shingles), w))
+
+  /** struct<mh0..mh{nh−1}, simhash> of a shingle-occurrence array. */
+  def shingleSignature(shingles: Column, nh: Int, simBits: Int): Column =
+    Shim.column(ShingleSignature(Shim.expression(shingles), nh, simBits))
 
   def blockHash(toks: Column, b: Int): Column =
     Shim.column(BlockHash(Shim.expression(toks), b))

@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.Tables._
 import graft.functions.ExactCols._
+import graft.functions.TextExprs
 
 /** Document deduplication operators for a training-data pipeline:
   * MinHash signatures, MinHash+LSH near-dup pairs, SimHash, SimHash
@@ -22,15 +23,18 @@ import graft.functions.ExactCols._
   * nested-loop/cartesian join — DedupApiSpec machine-checks that.
   *
   * Scale design (the point of each query, beyond correctness):
-  *  - Signatures are computed as `explode(shingles) → hash once →
-  *    codegen'd partial+final HashAggregate (min/sum per hash
-  *    function/bit)`. The per-row higher-order-function formulation
-  *    (array_min(transform(...)) × 8, filter(...) × 30) is
-  *    semantically identical but evaluates interpreted closures —
-  *    measured >10× slower at sf0.1 — and re-hashes every shingle
-  *    once per hash function. The explode shape hashes each shingle
-  *    once and keeps the whole stage in whole-stage codegen; map-side
-  *    combine reduces the shuffle to one row per (doc, aggregate).
+  *  - Signatures are a per-row projection: one native
+  *    ShingleSignature kernel md5-folds each shingle occurrence once
+  *    and keeps all NH MinHash minima and SIMBITS SimHash bit counters
+  *    in one loop, inside whole-stage codegen. A document's shingles
+  *    all live in its row, so nothing crosses a shuffle. The former
+  *    explode(shingles) → groupBy(doc_id) shape sent one row per
+  *    shingle through an exchange (traced signature span of the
+  *    perfbench dedup shard, 4-core host: 0.86 s with it, 0.51 s with
+  *    the kernel), and the higher-order-function form
+  *    (array_min(transform(...)) × 8) ran interpreted closures and
+  *    re-hashed every shingle once per hash function. Batch and
+  *    streaming ([[graft.streaming.DedupStream]]) share the kernel.
   *  - Candidate generation shuffles on the BAND / BLOCK key, never on
   *    document content: pairs materialize only within colliding
   *    buckets (classic LSH join), so cost tracks the number of true
@@ -77,20 +81,23 @@ object Dedup {
     require(maxBucketSize > 1, "maxBucketSize out of range")
   }
 
-  // ---- Spark-side building blocks (explode → codegen aggregate) ----
+  // ---- Spark-side building blocks ----
 
-  /** doc_id + one row per shingle hash (md5 evaluated exactly once
-    * per shingle). */
-  private def shingleHashes(docs: DataFrame, size: Int, distinct: Boolean): DataFrame =
-    docs
-      .select(col("doc_id"), explode(shingles(tokens(col("text")), size, distinct)).as("sg"))
-      .select(col("doc_id"), hmod(col("sg")).as("h"))
+  /** The per-document signature struct (mh0..mh{NH−1}, simhash): one
+    * native ShingleSignature pass over the text's SHINGLE-word
+    * shingle occurrences — no explode, no shuffle. A null text signs
+    * as the empty text (mh_j = P, simhash 0). */
+  private def signature(text: Column): Column =
+    TextExprs.shingleSignature(
+      shingles(tokens(coalesce(text, lit(""))), SHINGLE, distinct = false), NH, SIMBITS)
 
-  /** Codegen'd min-aggregates: mh_j = min((2j+1)·h + j²+7 mod P). */
-  private def mhAggs(n: Int): Seq[Column] =
-    (0 until n).map { j =>
-      min((lit(2L * j + 1) * col("h") + lit(j.toLong * j + 7)) % P).as(s"mh$j")
-    }
+  /** The "mh0-mh1-…-mh{NH−1}" MinHash key of a text (P per slot for a
+    * shingle-less text) — q23's `sig` and the streaming near-dup key
+    * ([[graft.streaming.DedupStream.minhashSig]]). */
+  private[graft] def minhashKey(text: Column): Column = {
+    val sig = signature(text)
+    concat_ws("-", (0 until NH).map(j => sig.getField(s"mh$j").cast("string")): _*)
+  }
 
   /** (gid, doc_id) clone-group table + (doc_id = gid, text)
     * representative table for the exact-clone collapse: gid = min
@@ -113,64 +120,34 @@ object Dedup {
     * through the group table (identical text ⇒ identical signature). */
   def minhashSignatures(docs: DataFrame): DataFrame = {
     val (members, reps) = cloneGroups(docs)
-    members.join(minhashSignaturesDistinct(reps)
-        .withColumnRenamed("doc_id", "gid"), "gid")
-      .select(col("doc_id") +:
-        (0 until NH).map(j => col(s"mh$j")): _*)
+    expandClones(members, minhashSignaturesDistinct(reps))
   }
 
   /** [[minhashSignatures]] without the collapse — the primitive run
-    * over an already-distinct corpus (band table, collapsed callers). */
-  private def minhashSignaturesDistinct(docs: DataFrame): DataFrame = {
-    val aggs = mhAggs(NH)
-    shingleHashes(docs, SHINGLE, distinct = true)
-      .groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-  }
+    * over an already-distinct corpus (band table, collapsed callers).
+    * The shingle-count filter sits BELOW the signature projection: a
+    * filter on the kernel's output would be pushed beneath the
+    * Project with the kernel inlined, evaluating it twice per row. */
+  private def minhashSignaturesDistinct(docs: DataFrame): DataFrame =
+    docs.filter(size(tokens(col("text"))) >= SHINGLE)
+      .select(col("doc_id"), signature(col("text")).as("s"))
+      .select(col("doc_id") +: (0 until NH).map(j => col(s"s.mh$j").as(s"mh$j")): _*)
 
   /** doc_id → SIMBITS-bit simhash for ALL docs (empty-shingle docs →
     * 0), exact-clone collapsed like [[minhashSignatures]]. */
   def simhashSignatures(docs: DataFrame): DataFrame = {
     val (members, reps) = cloneGroups(docs)
-    members.join(simhashSignaturesDistinct(reps)
-        .withColumnRenamed("doc_id", "gid"), "gid")
-      .select(col("doc_id"), col("simhash"))
+    expandClones(members, simhashSignaturesDistinct(reps))
   }
 
-  /** [[simhashSignatures]] without the collapse: bit-sums as plain
-    * codegen'd sum() aggregates over one row per shingle occurrence. */
+  /** [[simhashSignatures]] without the collapse. */
   private def simhashSignaturesDistinct(docs: DataFrame): DataFrame =
-    simhashSigsFromOcc(shingleHashes(docs, SHINGLE, distinct = false),
-      docs.select(col("doc_id")))
+    docs.select(col("doc_id"), signature(col("text")).getField("simhash").as("simhash"))
 
-  /** [[simhashSignaturesDistinct]] from a pre-built per-OCCURRENCE
-    * shingle-hash table `occ` = (doc_id, h), one row per shingle
-    * occurrence; `docIds` supplies the universe (empty-shingle docs →
-    * simhash 0). Shared-feature-pass callers ([[dedupRouteMatrix]])
-    * hand in one checkpointed occ that also derives the jaccard/
-    * minhash hash set. */
-  private def simhashSigsFromOcc(occ: DataFrame, docIds: DataFrame): DataFrame = {
-    val bitSums = (0 until SIMBITS).map { k =>
-      sum(shiftright(col("h"), k).bitwiseAND(lit(1L))).as(s"c$k")
-    }
-    val bits = occ
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n"), bitSums: _*)
-    val sim = bits.select(col("doc_id"),
-      (0 until SIMBITS).map { k =>
-        when(lit(2) * col(s"c$k") - col("n") > 0, lit(1L << k)).otherwise(lit(0L))
-      }.reduce(_ + _).as("simhash"))
-    docIds.join(sim, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("simhash"), lit(0L)).as("simhash"))
-  }
-
-  /** [[simhashSignatures]] from a pre-built clone collapse (shared-
-    * subtree callers): expand per-rep signatures through the FULL
-    * (gid, doc_id) group table — empty-shingle reps already carry
-    * simhash 0 from [[simhashSignaturesDistinct]]'s left join. */
-  private def simhashSignaturesCollapsed(members: DataFrame, reps: DataFrame): DataFrame =
-    members.join(simhashSignaturesDistinct(reps)
-        .withColumnRenamed("doc_id", "gid"), "gid")
-      .select(col("doc_id"), col("simhash"))
+  /** Per-rep signatures expanded to every member of the rep's clone
+    * group: (gid, doc_id) ⋈ (doc_id = gid, sig…) → (doc_id, sig…). */
+  private def expandClones(members: DataFrame, repSigs: DataFrame): DataFrame =
+    members.join(repSigs.withColumnRenamed("doc_id", "gid"), "gid").drop("gid")
 
   /** Spec-only window into the checkpoint-hidden subtrees (r13,
     * advisor ask): cut() turns a subtree into `Scan ExistingRDD` in
@@ -178,22 +155,21 @@ object Dedup {
     * cannot see under it — a reintroduced HOF or uncapped join inside
     * the signature stages would go unswept. This returns the PRE-cut
     * derived tables the dedup routes materialize (minhash band table,
-    * simhash block table, the shingle
-    * occurrence table and its distinct hash set) so the sweeps assert
-    * on them directly. Never called from query paths. */
+    * simhash block table and the jaccard route's distinct shingle-hash
+    * set) so the sweeps assert on them directly. Never called from
+    * query paths. */
   private[graft] def preCutSubtrees(docs: DataFrame,
                                     cfg: LshConfig = LshConfig()): Seq[(String, DataFrame)] = {
     val (_, reps) = cloneGroups(docs)
-    val occ = reps
+    val hset = reps
       .select(col("doc_id"),
-        explode(shingles(tokens(col("text")), SHINGLE, distinct = false)).as("sg"))
+        explode(shingles(tokens(col("text")), SHINGLE, distinct = true)).as("sg"))
       .select(col("doc_id"), hmod(col("sg")).as("h"))
-    val hset = occ.distinct()
+      .distinct()
     Seq(
       "minhash_band_table" -> bandTable(minhashSignaturesDistinct(reps), cfg),
       "simhash_block_table" -> blockTable(simhashSignaturesDistinct(reps), cfg),
-      "jaccard_hset" -> hset,
-      "shingle_occ" -> occ)
+      "jaccard_hset" -> hset)
   }
 
   /** Skew guard: deterministically keep at most `cap` members per
@@ -310,9 +286,9 @@ object Dedup {
       else {
         // cut: the self-join inside collidingPairs reads the capped
         // band table twice — without a materialization the whole
-        // signature subtree (shingle explode + md5 + 8-way min
-        // aggregate + cap window) evaluates once per side (guide
-        // §2.4/§5; the narrow 3-column table is cheap to store).
+        // signature subtree (md5 per shingle + cap window) evaluates
+        // once per side (guide §2.4/§5; the narrow 3-column table is
+        // cheap to store).
         // Known cost (r13, measured in the after-plans): a
         // localCheckpoint discards outputPartitioning
         // (UnknownPartitioning), so the self-join re-exchanges BOTH
@@ -1358,25 +1334,15 @@ object Dedup {
     // whose rep text shingles
     val membersSh = membersAll
       .join(repSh.select(col("doc_id").as("gid")), "gid")
-    // Tried and REVERTED (r13): sharing the shingle-hash feature pass
-    // across the three routes. Three variants, each measured at sf10
-    // (interleaved min-of-passes, adjacent pristine pairs 20.8–26.9 s
-    // under a drifting host): (a) one per-OCCURRENCE (doc_id, hmod)
-    // table cut() feeding simhash bit-sums + a distinct hash set for
-    // jaccard/minhash — 1.07–1.21× SLOWER (materializing ~10⁸
-    // un-reduced occurrence rows costs more block I/O than the two
-    // saved md5 sweeps); (b) the same without the occurrence cut —
-    // 27.0 vs 22.2 s (re-running the explode per reference is worse
-    // still); (c) hset-only sharing (minhash min-aggs reading the
-    // jaccard route's existing checkpointed distinct hash set) —
-    // 30.3 vs 25.1 s adjacent (reading ~800 MB of hset blocks loses
-    // to the explode+md5+map-side-combine recompute, the q225
-    // recompute rule). The same sharing measured 0.84× at sf0.1 —
-    // a win only where the corpus is 100× smaller, i.e. a local-mode
-    // win, which is not a win (guide §1.2/§2). Each route therefore
-    // keeps its own map-side-combined feature pass; the shared parts
-    // remain the clone collapse + rep text above (r10, 1.20× at
-    // sf0.1 / 1.10× at sf10, still standing).
+    // Tried and REVERTED (r13): sharing one materialized shingle-hash
+    // table across the three routes. At sf10 every variant lost to
+    // per-route recompute (1.07–1.21× for a cut per-occurrence table,
+    // 1.2× for the jaccard hash set read by minhash: the block I/O
+    // of ~10⁸ rows / ~800 MB cost more than the md5 it saved); it won only at
+    // sf0.1, a local-mode win. So minhash and simhash each run the
+    // per-row signature kernel over the reps, and the shared parts
+    // stay the clone collapse + rep text above (r10, 1.20× at sf0.1 /
+    // 1.10× at sf10).
     val routes = Seq(
       "jaccard" -> ngramJaccardPairsCollapsed(membersSh, repSh,
           jaccardThreshold, maxDocFreq = 100, mode = "auto")
@@ -1384,7 +1350,7 @@ object Dedup {
       "minhash" -> nearDupPairsCollapsed(membersSh, repSh, cfg)
         .select(col("a_id"), col("b_id")).cut(),
       "simhash" -> simhashPairsFromSigs(
-          simhashSignaturesCollapsed(membersAll, repText), cfg)
+          expandClones(membersAll, simhashSignaturesDistinct(repText)), cfg)
         .select(col("a_id"), col("b_id")).cut())
     routeMatrixCells(routes)
   }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.ExactCols._
+import graft.functions.ExactCols.tokens
 
 /** Streaming deduplication for an unbounded document feed — the
   * training-pipeline operators (Dedup q20/q23-24) in their streaming
@@ -31,18 +31,11 @@ object DedupStream {
       .dropDuplicatesWithinWatermark("__h")
       .drop("__h")
 
-  /** 8-hash MinHash signature as a per-row expression (the streaming
-    * path cannot use the batch explode→groupBy shape on a per-doc
-    * basis without its own aggregation state; per-row HOF evaluation
-    * costs more CPU per document but zero state). */
-  def minhashSig(contentCol: Column): Column = {
-    val hs = transform(shingles(tokens(contentCol), 3, distinct = true), s => hmod(s))
-    concat_ws("-", (0 until 8).map { j =>
-      coalesce(
-        array_min(transform(hs, h => (lit(2L * j + 1) * h + lit(j.toLong * j + 7)) % P)),
-        lit(P)).cast("string")
-    }: _*)
-  }
+  /** The MinHash key "mh0-…-mh7" as a per-row expression: the batch
+    * signature kernel ([[graft.queries.Dedup.minhashKey]]), so a
+    * streamed document keys exactly as q23 signs it — no per-doc
+    * aggregation state, no interpreted lambdas. */
+  def minhashSig(contentCol: Column): Column = graft.queries.Dedup.minhashKey(contentCol)
 
   /** Keep the first-seen row per MinHash signature within the
     * watermark horizon (near-dup suppression). */

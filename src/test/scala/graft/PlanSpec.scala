@@ -57,7 +57,9 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("aggregations run partial+final (map-side combine before shuffle)") {
-    for (q <- Seq("q01_agg_basic", "q16_wordcount", "q23_minhash_sig")) {
+    // q23 left this list: its signatures are a per-row kernel
+    // projection with no aggregate (pinned by the guard below)
+    for (q <- Seq("q01_agg_basic", "q16_wordcount")) {
       val p = plan(q)
       assert("HashAggregate".r.findAllIn(p).size >= 2, s"$q lacks partial agg: $p")
     }
@@ -145,6 +147,51 @@ class PlanSpec extends AnyFunSuite {
       assert(!p.contains("CartesianProduct"), s"$n plans a cartesian:\n$p")
       assert(!p.contains("BroadcastNestedLoopJoin"), s"$n plans a nested loop:\n$p")
     }
+  }
+
+  test("dedup signatures run the per-row kernel: no shingle explode feeds a doc_id aggregate") {
+    // Signatures are one ShingleSignature projection per document. The
+    // replaced shape exploded every shingle and regrouped by doc_id
+    // through a shuffle. The routes cut() their signature subtrees, so
+    // the check reads every plan the build and the run execute
+    // (checkpoint actions included), through a listener.
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def shingleExplode(p: SparkPlan): Boolean = p match {
+      case g: GenerateExec => g.generator.exists(_.isInstanceOf[graft.functions.WordNGrams])
+      case _ => false
+    }
+    def docAggFedByExplode(p: SparkPlan): Boolean = p match {
+      case a: BaseAggregateExec =>
+        a.groupingExpressions.exists(_.references.exists(_.name == "doc_id")) &&
+          aqe.find(a)(shingleExplode).isDefined
+      case _ => false
+    }
+    val cases: Seq[(String, () => org.apache.spark.sql.DataFrame)] =
+      Seq("q23_minhash_sig", "q24_dedup_minhash_lsh", "q25_dedup_simhash",
+        "q26_dedup_simhash_pairs").map(q => q -> (() => SparkEntry.queries(q)(spark, sf))) :+
+        ("Dedup.deduplicate" -> (() =>
+          graft.queries.Dedup.deduplicate(Tables.t(spark, sf, "documents"))))
+    spark.listenerManager.register(listener)
+    try for ((name, build) <- cases) {
+      seen.clear()
+      build().collect()
+      org.apache.spark.GraftSparkShim.drainListenerBus(spark.sparkContext)
+      val plans = seen.asScala.toSeq.map(_.executedPlan)
+      assert(plans.exists(_.toString.contains("shingle_signature")),
+        s"$name runs no shingle_signature:\n${plans.mkString("\n")}")
+      val bad = plans.filter(p => aqe.find(p)(docAggFedByExplode).isDefined)
+      assert(bad.isEmpty, s"$name regroups exploded shingles by doc_id:\n${bad.mkString("\n")}")
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("q62: quantize pass is the only embeddings scan (stats pass is separate)") {

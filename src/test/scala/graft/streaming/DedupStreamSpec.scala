@@ -50,6 +50,29 @@ class DedupStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streaming MinHash key ≡ q23's batch sig for every sf0.01 doc; no lambda in the plan") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val sf = "/root/testdata/sf0.01"
+    val batch = graft.SparkEntry.queries("q23_minhash_sig")(spark, sf).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val docs = graft.Tables.t(spark, sf, "documents").select("doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getString(1)))
+    assert(batch.size == docs.length)
+    val keyed = docs.toSeq.toDF("doc_id", "text")
+      .select(col("doc_id"), DedupStream.minhashSig(col("text")))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(keyed == batch)
+
+    val stream = DedupStream.dedupMinhash(
+      MemoryStream[(Long, Timestamp, String)].toDF().toDF("doc_id", "ts", "text"),
+      "ts", "text", watermark = "1 hour")
+    val plan = stream.queryExecution.analyzed.toString
+    assert(plan.contains("shingle_signature"), plan)
+    assert(!plan.contains("lambdafunction"), plan)
+  }
+
   test("streaming span dedup ≡ batch first-occurrence when ingest follows doc_id order") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
