@@ -269,10 +269,10 @@ case class WinnowFingerprint(child: Expression, w: Int)
   * over its shingle OCCURRENCES (word n-grams, `distinct = false`):
   * each occurrence is md5-folded once (ExactCols.hmodBytes, the
   * shared hmod), and one loop keeps
-  *  - `nh` minima mh_j = min ((2j+1)·h + j²+7) mod P (the MinHash
+  *  - NH minima mh_j = min ((2j+1)·h + j²+7) mod P (the MinHash
   *    family; min is idempotent, so occurrences give the same minima
   *    as the distinct shingle set), and
-  *  - `simBits` bit counters c_k = #{h : bit k of h set}; simhash bit
+  *  - SIMBITS bit counters c_k = #{h : bit k of h set}; simhash bit
   *    k is set iff 2·c_k > #occurrences (majority with multiplicity).
   * An empty array gives mh_j = P (the no-shingle sentinel) and
   * simhash 0. Null input → null; null elements are skipped.
@@ -281,14 +281,13 @@ case class WinnowFingerprint(child: Expression, w: Int)
   * needs no explode → groupBy(doc) shuffle: the operator stays a
   * scan-stage projection inside whole-stage codegen (doGenCode calls
   * compute, as WinnowFingerprint does). */
-case class ShingleSignature(child: Expression, nh: Int, simBits: Int)
+case class ShingleSignature(child: Expression)
     extends UnaryExpression with Serializable {
-  // h < P < 2³⁰, so bits above 29 are always clear
-  require(nh > 0 && simBits > 0 && simBits <= 30, "signature width out of range")
+  import ShingleSignature.{NH, SIMBITS}
 
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = StructType(
-    (0 until nh).map(j => StructField(s"mh$j", LongType, nullable = false)) :+
+    (0 until NH).map(j => StructField(s"mh$j", LongType, nullable = false)) :+
       StructField("simhash", LongType, nullable = false))
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -301,32 +300,32 @@ case class ShingleSignature(child: Expression, nh: Int, simBits: Int)
   def compute(xs: ArrayData): InternalRow = {
     val P = ExactCols.P
     val n = xs.numElements()
-    val mh = Array.fill(nh)(P)
-    val bits = new Array[Long](simBits)
+    val mh = Array.fill(NH)(P)
+    val bits = new Array[Long](SIMBITS)
     var occ = 0L
     var i = 0
     while (i < n) {
       if (!xs.isNullAt(i)) {
         val h = ExactCols.hmodBytes(xs.getUTF8String(i).getBytes)
         var j = 0
-        while (j < nh) {
+        while (j < NH) {
           val v = ((2L * j + 1) * h + (j.toLong * j + 7)) % P
           if (v < mh(j)) mh(j) = v
           j += 1
         }
         var k = 0
-        while (k < simBits) { bits(k) += (h >>> k) & 1L; k += 1 }
+        while (k < SIMBITS) { bits(k) += (h >>> k) & 1L; k += 1 }
         occ += 1
       }
       i += 1
     }
     var sim = 0L
     var k = 0
-    while (k < simBits) { if (2 * bits(k) > occ) sim |= 1L << k; k += 1 }
-    val out = new Array[Any](nh + 1)
+    while (k < SIMBITS) { if (2 * bits(k) > occ) sim |= 1L << k; k += 1 }
+    val out = new Array[Any](NH + 1)
     var j = 0
-    while (j < nh) { out(j) = mh(j); j += 1 }
-    out(nh) = sim
+    while (j < NH) { out(j) = mh(j); j += 1 }
+    out(NH) = sim
     new GenericInternalRow(out)
   }
 
@@ -341,6 +340,14 @@ case class ShingleSignature(child: Expression, nh: Int, simBits: Int)
   override protected def withNewChildInternal(newChild: Expression): ShingleSignature =
     copy(child = newChild)
   override def prettyName: String = "shingle_signature"
+}
+
+object ShingleSignature {
+  /** MinHash functions (4 LSH bands × 2 rows in Dedup); the oracle SQL
+    * lists the same NH minima. */
+  val NH = 8
+  /** SimHash width: h < P < 2³⁰, so every bit of h is counted. */
+  val SIMBITS = 30
 }
 
 /** Count of array elements containing at least one ASCII letter —
@@ -720,9 +727,9 @@ object TextExprs {
   def winnowFingerprint(shingles: Column, w: Int): Column =
     Shim.column(WinnowFingerprint(Shim.expression(shingles), w))
 
-  /** struct<mh0..mh{nh−1}, simhash> of a shingle-occurrence array. */
-  def shingleSignature(shingles: Column, nh: Int, simBits: Int): Column =
-    Shim.column(ShingleSignature(Shim.expression(shingles), nh, simBits))
+  /** struct<mh0..mh7, simhash> of a shingle-occurrence array. */
+  def shingleSignature(shingles: Column): Column =
+    Shim.column(ShingleSignature(Shim.expression(shingles)))
 
   def blockHash(toks: Column, b: Int): Column =
     Shim.column(BlockHash(Shim.expression(toks), b))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.Tables._
 import graft.functions.ExactCols._
-import graft.functions.TextExprs
+import graft.functions.{ShingleSignature, TextExprs}
 
 /** Document deduplication operators for a training-data pipeline:
   * MinHash signatures, MinHash+LSH near-dup pairs, SimHash, SimHash
@@ -66,9 +66,8 @@ import graft.functions.TextExprs
 object Dedup {
 
   // The gate-calibrated parameters (see object scaladoc).
-  private val NH = 8      // minhash functions
+  import ShingleSignature.{NH, SIMBITS} // 8 minhash functions, 30 simhash bits
   private val BANDS = 4   // bands of 2 rows
-  private val SIMBITS = 30
   private val SHINGLE = 3 // words per shingle
   private val JACCARD = 0.5 // near-dup threshold on verified jaccard
   private val MAXHAM = 3  // simhash near-dup hamming bound
@@ -89,14 +88,19 @@ object Dedup {
     * as the empty text (mh_j = P, simhash 0). */
   private def signature(text: Column): Column =
     TextExprs.shingleSignature(
-      shingles(tokens(coalesce(text, lit(""))), SHINGLE, distinct = false), NH, SIMBITS)
+      shingles(tokens(coalesce(text, lit(""))), SHINGLE, distinct = false))
 
-  /** The "mh0-mh1-…-mh{NH−1}" MinHash key of a text (P per slot for a
-    * shingle-less text) — q23's `sig` and the streaming near-dup key
-    * ([[graft.streaming.DedupStream.minhashSig]]). */
+  /** The "mh0-mh1-…-mh{NH−1}" MinHash key over the NH `mh` columns
+    * `mh(j)`, P standing in for a missing (shingle-less) slot — the one
+    * key format of q23's `sig` and the streaming near-dup key. */
+  private def minhashKeyOf(mh: Int => Column): Column =
+    concat_ws("-", (0 until NH).map(j => coalesce(mh(j), lit(P)).cast("string")): _*)
+
+  /** A text's MinHash key ([[minhashKeyOf]] over its signature) — the
+    * streaming near-dup key ([[graft.streaming.DedupStream.minhashSig]]). */
   private[graft] def minhashKey(text: Column): Column = {
     val sig = signature(text)
-    concat_ws("-", (0 until NH).map(j => sig.getField(s"mh$j").cast("string")): _*)
+    minhashKeyOf(j => sig.getField(s"mh$j"))
   }
 
   /** (gid, doc_id) clone-group table + (doc_id = gid, text)
@@ -1474,9 +1478,7 @@ object Dedup {
       val docs = t(s, d, "documents")
       docs.select(col("doc_id"))
         .join(minhashSignatures(docs), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          concat_ws("-",
-            (0 until NH).map(j => coalesce(col(s"mh$j"), lit(P)).cast("string")): _*).as("sig"))
+        .select(col("doc_id"), minhashKeyOf(j => col(s"mh$j")).as("sig"))
         .orderBy(col("doc_id"))
     }, Some(s"""
       WITH $tkCte, $shCte, $mhCte

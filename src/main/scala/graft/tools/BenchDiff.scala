@@ -18,12 +18,11 @@ import java.nio.file.{Files, Paths}
   *    (CPU-kernel-bound) — r10 showed q01 flat while kernel-bound
   *    queries doubled, so a mover is host drift if its ratio to
   *    EITHER anchor held.
-  *  - an anchor whose own shuffle bytes moved changed PLAN, so its
-  *    time is no host signal: it is dropped for that comparison (and
-  *    the drop printed). q23 changed shape when dedup signatures
-  *    became the per-row ShingleSignature kernel (no shingle explode,
-  *    no aggregate shuffle): across that change only q01 and the
-  *    fleet median normalize.
+  *  - q23 changed shape when dedup signatures became the per-row
+  *    ShingleSignature kernel (no shingle explode, no aggregate
+  *    shuffle): across that change its time and bytes moved with its
+  *    plan, so compare captures on either side of it by q01 and the
+  *    fleet median, not by the q23 anchor.
   *
   * Usage: runMain graft.tools.BenchDiff <old.json> <new.json>
   *        [moverThreshold=1.5] [--scale=<bigger-sf bench_full.json>]
@@ -71,6 +70,20 @@ object BenchDiff {
     val (qo, qn) = (numMap(oldJ, "queries"), numMap(newJ, "queries"))
     val (bo, bn) = (numMap(oldJ, "shuffle_bytes"), numMap(newJ, "shuffle_bytes"))
     val (ro, rn) = (numMap(oldJ, "shuffle_read_bytes"), numMap(newJ, "shuffle_read_bytes"))
+    // anchors derived from the queries maps themselves, so the tool
+    // works on pre-r11 artifacts that carried only the q01 anchor
+    val anchors = Seq("q01_agg_basic", "q23_minhash_sig").filter(a =>
+      qo.getOrElse(a, -1.0) > 0 && qn.getOrElse(a, -1.0) > 0)
+    require(anchors.nonEmpty, "no shared positive anchor query in both captures")
+    val common = (qo.keySet & qn.keySet).toSeq.sorted
+      .filter(q => qo(q) > 0 && qn(q) > 0)
+    // third normalizer: the FLEET MEDIAN ratio. A sustained host shift
+    // moves the whole surface together (r11 observed a broad ~1.8×
+    // CPU-side shift that q01 did not carry and q23 carried only
+    // partially); a genuine plan regression moves ONE query against
+    // the fleet. The median is robust to the movers themselves.
+    val ratios = common.map(q => qn(q) / qo(q)).sorted
+    val fleet = if (ratios.isEmpty) 1.0 else ratios(ratios.size / 2)
 
     def bytesMoved(q: String): Boolean = {
       def moved(a: Map[String, Double], b: Map[String, Double]): Boolean =
@@ -81,24 +94,6 @@ object BenchDiff {
         }
       moved(bo, bn) || moved(ro, rn)
     }
-
-    // anchors derived from the queries maps themselves, so the tool
-    // works on pre-r11 artifacts that carried only the q01 anchor
-    val positive = Seq("q01_agg_basic", "q23_minhash_sig").filter(a =>
-      qo.getOrElse(a, -1.0) > 0 && qn.getOrElse(a, -1.0) > 0)
-    require(positive.nonEmpty, "no shared positive anchor query in both captures")
-    val (anchors, replanned) = positive.partition(!bytesMoved(_))
-    for (a <- replanned)
-      println(s"anchor $a dropped: its shuffle bytes moved (plan changed, not a host signal)")
-    val common = (qo.keySet & qn.keySet).toSeq.sorted
-      .filter(q => qo(q) > 0 && qn(q) > 0)
-    // third normalizer: the FLEET MEDIAN ratio. A sustained host shift
-    // moves the whole surface together (r11 observed a broad ~1.8×
-    // CPU-side shift that q01 did not carry and q23 carried only
-    // partially); a genuine plan regression moves ONE query against
-    // the fleet. The median is robust to the movers themselves.
-    val ratios = common.map(q => qn(q) / qo(q)).sorted
-    val fleet = if (ratios.isEmpty) 1.0 else ratios(ratios.size / 2)
 
     case class Row(q: String, tOld: Double, tNew: Double, dx: Double,
                    bestShift: Double, bytes: Boolean, label: String)

@@ -55,25 +55,6 @@ class BenchDiffSpec extends AnyFunSuite {
     assert(s.contains("q84_y") && s.contains("PLAN-CHANGE"), s)
   }
 
-  test("an anchor whose shuffle bytes moved is dropped (its plan changed)") {
-    def art(q23: Double, q23bytes: Long): String =
-      s"""{"queries":{"q01_agg_basic":1.0,"q23_minhash_sig":$q23,"q83_x":2.0},""" +
-        s""""shuffle_bytes":{"q01_agg_basic":1000,"q23_minhash_sig":$q23bytes,"q83_x":5000},""" +
-        s""""shuffle_read_bytes":{"q01_agg_basic":900,"q23_minhash_sig":1800,"q83_x":4500}}"""
-    val dir = java.nio.file.Files.createTempDirectory("bdiff")
-    val o = dir.resolve("old.json"); val n = dir.resolve("new.json")
-    java.nio.file.Files.writeString(o, art(2.0, 2000))
-    java.nio.file.Files.writeString(n, art(0.5, 400))
-    val out = new java.io.ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(out)) {
-      graft.tools.BenchDiff.main(Array(o.toString, n.toString))
-    }
-    val s = out.toString("UTF-8")
-    assert(s.contains("anchor q23_minhash_sig dropped"), s)
-    val anchorLine = s.linesIterator.find(_.startsWith("anchors:")).getOrElse("")
-    assert(anchorLine.contains("q01_agg_basic") && !anchorLine.contains("q23_minhash_sig"), s)
-  }
-
   test("--scale self-adjudicates: a mover whose bigger-sf anchor ratio held is a host window") {
     // q85 moves 3x against BOTH anchors and the fleet with identical
     // bytes (anchors flat, the rest of the fleet flat) — without

@@ -14,8 +14,7 @@ import graft.queries.Dedup
   * The kernel exists for speed only, so equality is the contract. */
 class ShingleSignatureSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  private val NH = 8
-  private val SIMBITS = 30
+  import ShingleSignature.{NH, SIMBITS}
 
   // ---- reference: one row per shingle, min/sum aggregates per doc ----
 
@@ -116,7 +115,7 @@ class ShingleSignatureSpec extends AnyFunSuite {
 
   test("kernel: MinHash over occurrences ≡ over the distinct shingle set; empty and null edges") {
     def sig(distinct: Boolean) =
-      TextExprs.shingleSignature(shingles(tokens(col("text")), 3, distinct), NH, SIMBITS)
+      TextExprs.shingleSignature(shingles(tokens(col("text")), 3, distinct))
     val mh = (0 until NH).map(j => s"mh$j")
     val docs = graft.Tables.t(spark, "/root/testdata/sf0.1", "documents")
       .select(col("doc_id"), col("text"))
